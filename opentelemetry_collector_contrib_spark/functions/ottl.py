@@ -293,8 +293,8 @@ _REGISTRY: dict[str, Callable[..., Column]] = {
     "SHA512": lambda c: F.sha2(_col(c).cast("binary"), 512),
     "MD5": lambda c: F.md5(_col(c).cast("binary")),
     # exact reference-compatible hashes (functions/hashes.py — verified
-    # against the reference test vectors; Arrow-batched pandas UDFs,
-    # cold path by design)
+    # against the reference test vectors; pandas UDFs that hash the
+    # whole Arrow batch with numpy kernels)
     "Murmur3Hash": lambda c: _hashes().murmur3_hex_udf(_col(c)),
     "Murmur3Hash128": lambda c: _hashes().murmur3_128_hex_udf(_col(c)),
     "FNV": lambda c: _hashes().fnv1a64_udf(_col(c)),

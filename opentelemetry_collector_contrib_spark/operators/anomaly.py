@@ -20,11 +20,14 @@ Spark shape, designed for 100 TB:
   ``num_trees x sample_size`` rows chosen as the n-lowest
   ``xxhash64(id)`` (reproducible on any cluster size, no rand()),
   the same bounded-collect class as skew.py's hot-key sample.
-* Trees are built in pure Python with a seeded PRNG and BROADCAST
-  as nested tuples.
-* SCORE distributed with one vectorized pandas UDF (numpy batch
-  traversal) — no shuffle, no state; the scored frame is the input
-  plus (anomaly_score, is_anomaly).
+* Trees are built in pure Python with a seeded PRNG as nested
+  tuples, then flattened once into node arrays (``flatten_forest``)
+  that are BROADCAST.
+* SCORE distributed with one pandas UDF: every row of the Arrow batch
+  descends every tree together, one tree level per numpy step
+  (``score_batch``) — no shuffle, no state; the scored frame is the
+  input plus (anomaly_score, is_anomaly). Scores are bit-identical to
+  the scalar ``score_point``.
 
 The adaptive threshold restates as a fixed config threshold
 (reference config.go Threshold default 0.7); a quantile-based
@@ -36,6 +39,8 @@ from __future__ import annotations
 import math
 import random
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -109,10 +114,80 @@ def _path_length(tree, x, depth: int = 0) -> float:
 
 def score_point(model: dict, x) -> float:
     """Anomaly score s(x) = 2^(-E[h(x)] / c(psi)) in (0, 1); > 0.5
-    means shorter-than-average isolation paths (anomalous)."""
+    means shorter-than-average isolation paths (anomalous). This is
+    the scalar specification that ``score_batch`` matches bit for
+    bit."""
     trees = model["trees"]
-    e_h = sum(_path_length(t, x) for t in trees) / len(trees)
-    return 2.0 ** (-e_h / model["c_norm"]) if model["c_norm"] else 0.0
+    e_h = sum(_path_length(t, x) for t in trees)
+    if not model["c_norm"]:
+        return 0.0
+    return 2.0 ** (-(e_h / len(trees)) * (1.0 / model["c_norm"]))
+
+
+def flatten_forest(model: dict) -> dict:
+    """The forest as parallel node arrays over all trees: an internal
+    node tests ``x[feat] < thr`` and moves to ``left`` or ``right``; a
+    leaf points at itself and holds its whole path length ``leaf_h``
+    (depth + c(size), the same float ``_path_length`` returns)."""
+    feat, thr, left, right, leaf_h, depths = [], [], [], [], [], [0]
+
+    def add(node, depth: int) -> int:
+        i = len(feat)
+        depths.append(depth)
+        feat.append(0)
+        thr.append(0.0)
+        left.append(i)
+        right.append(i)
+        leaf_h.append(0.0)
+        if len(node) == 4:
+            feat[i], thr[i] = node[0], node[1]
+            left[i] = add(node[2], depth + 1)
+            right[i] = add(node[3], depth + 1)
+        else:
+            leaf_h[i] = depth + _c(node[0])
+        return i
+
+    roots = [add(t, 0) for t in model["trees"]]
+    return {"roots": np.array(roots, np.int64),
+            "feat": np.array(feat, np.int64),
+            "thr": np.array(thr, np.float64),
+            "left": np.array(left, np.int64),
+            "right": np.array(right, np.int64),
+            "leaf_h": np.array(leaf_h, np.float64),
+            "depth": max(depths),
+            "c_norm": model["c_norm"]}
+
+
+def _feature_matrix(cols) -> np.ndarray:
+    """Batch columns -> float64 rows x features; nulls and values that
+    are not numbers score as 0.0 (the fit sample's coercion)."""
+    return np.column_stack([
+        pd.to_numeric(c, errors="coerce").fillna(0.0).to_numpy(np.float64)
+        for c in cols])
+
+
+def score_batch(flat: dict, X: np.ndarray) -> np.ndarray:
+    """``score_point`` for every row of ``X`` at once. All rows descend
+    all trees together, one level per step; a leaf's self-loop keeps
+    finished rows in place. Path lengths add up in tree order, as in
+    ``score_point``. The last step, 2^y, stays a Python float pow per
+    value: numpy's SIMD power/exp2 differ from libm's pow by an ulp on
+    about a quarter of the inputs."""
+    n = len(X)
+    if not flat["c_norm"]:
+        return np.zeros(n)
+    xs = np.ascontiguousarray(X.T).ravel()        # feature-major
+    r = np.arange(n)
+    node = np.repeat(flat["roots"][:, None], n, axis=1)   # trees x rows
+    for _ in range(flat["depth"]):
+        v = xs[flat["feat"][node] * n + r]
+        node = np.where(v < flat["thr"][node],
+                        flat["left"][node], flat["right"][node])
+    e_h = np.zeros(n)
+    for h in flat["leaf_h"][node]:
+        e_h += h
+    y = -(e_h / len(flat["roots"])) * (1.0 / flat["c_norm"])
+    return np.array([2.0 ** v for v in y.tolist()], np.float64)
 
 
 def isolation_forest_scores(
@@ -144,29 +219,10 @@ def isolation_forest_scores(
 
     from pyspark.sql.functions import pandas_udf
     spark = df.sparkSession
-    bmodel = spark.sparkContext.broadcast(model)
+    bflat = spark.sparkContext.broadcast(flatten_forest(model))
 
     def batch(*cols):
-        import numpy as np
-        import pandas as pd
-        m = bmodel.value
-        X = np.column_stack([
-            pd.to_numeric(c, errors="coerce").fillna(0.0).to_numpy()
-            for c in cols])
-        out = np.empty(len(X))
-        inv_c = 1.0 / m["c_norm"] if m["c_norm"] else 0.0
-        trees = m["trees"]
-        for i in range(len(X)):
-            x = X[i]
-            e_h = 0.0
-            for t in trees:
-                node, d = t, 0
-                while len(node) == 4:
-                    node = node[2] if x[node[0]] < node[1] else node[3]
-                    d += 1
-                e_h += d + _c(node[0])
-            out[i] = 2.0 ** (-(e_h / len(trees)) * inv_c) if inv_c else 0.0
-        return pd.Series(out)
+        return pd.Series(score_batch(bflat.value, _feature_matrix(cols)))
 
     score = pandas_udf(batch, "double")(*[F.col(c).cast("double")
                                           for c in feature_cols])

@@ -74,9 +74,11 @@ def probabilistic_sampler(percent: float, hash_field: str | Column = "trace_id",
     ``fnv1a_32(le32(seed) || value_bytes) & 0x3FFF <
     uint32(percent * 2^14 / 100)`` — a collector at the same
     sampling_percentage/hash_seed passes the identical record set
-    through both layers. Hex-string fields hash their RAW bytes (trace
-    ids), everything else its UTF-8 string form (getBytesFromValue).
-    Vectorized pandas UDF (FNV has no JVM builtin)."""
+    through both layers. Hex-string fields (``^(?:[0-9a-fA-F]{2})+$``,
+    what Go's hex.DecodeString accepts) hash their RAW bytes (trace
+    ids), everything else its UTF-8 string form (getBytesFromValue);
+    a null field is never kept. Pandas UDF over the whole Arrow batch
+    (functions/hashes.py kernels; FNV has no JVM builtin)."""
     threshold = int(percent * (1 << 14) / 100)
 
     def fn(df: DataFrame) -> DataFrame:
@@ -94,25 +96,14 @@ def probabilistic_sampler(percent: float, hash_field: str | Column = "trace_id",
             from pyspark.sql.functions import pandas_udf
 
             from opentelemetry_collector_contrib_spark.functions.hashes import (
-                fnv1a_32)
+                fnv1a_32_kernel, hash_batch)
             seed_b = (seed & 0xFFFFFFFF).to_bytes(4, "little")
             thr = min(threshold, 1 << 14)
 
             def batch(s):
                 import pandas as pd
-
-                def one(v):
-                    if v is None:
-                        return False
-                    sv = str(v)
-                    try:
-                        raw = bytes.fromhex(sv)
-                        if len(sv) % 2 or not sv:
-                            raise ValueError
-                    except ValueError:
-                        raw = sv.encode("utf-8")
-                    return (fnv1a_32(seed_b + raw) & 0x3FFF) < thr
-                return pd.Series([one(v) for v in s])
+                h, null = hash_batch(fnv1a_32_kernel, s, seed_b, raw_hex=True)
+                return pd.Series(~null & ((h & 0x3FFF) < thr))
             return df.filter(pandas_udf(batch, "boolean")(col.cast("string")))
         bucket = F.pmod(F.xxhash64(col.cast("string"), F.lit(seed)), F.lit(1 << 14))
         return df.filter(bucket < F.lit(threshold))

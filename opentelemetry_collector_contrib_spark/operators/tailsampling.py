@@ -245,24 +245,20 @@ def probabilistic_keep_udf(salt: str, percentage: float):
     """The reference's deterministic trace-id sampler
     (sampling/probabilistic.go): FNV-1a 64 over salt bytes + RAW
     trace-id bytes <= floor(MaxUint64 * pct/100). Exact threshold via
-    Fraction (mirrors Go's big.Float of a float64 ratio)."""
+    Fraction (mirrors Go's big.Float of a float64 ratio). A trace id
+    that is not hex (``^(?:[0-9a-fA-F]{2})+$``) hashes its UTF-8 bytes;
+    a null trace id is not kept."""
     from pyspark.sql.functions import pandas_udf
 
     from opentelemetry_collector_contrib_spark.functions.hashes import (
-        fnv1a_64)
+        fnv1a_64_kernel, hash_batch)
     salt_b = (salt or "default-hash-seed").encode("utf-8")
     threshold = int(Fraction(_MAX_U64) * Fraction(percentage / 100.0))
 
     def batch(s):
         import pandas as pd
-
-        def one(h):
-            try:
-                raw = bytes.fromhex(h)
-            except (TypeError, ValueError):
-                raw = str(h).encode("utf-8")
-            return fnv1a_64(salt_b + raw) <= threshold
-        return pd.Series([one(v) for v in s])
+        h, null = hash_batch(fnv1a_64_kernel, s, salt_b, raw_hex=True)
+        return pd.Series(~null & (h <= threshold))
     return pandas_udf(batch, "boolean")
 
 
@@ -425,7 +421,8 @@ def tail_sampling_policies(spans: DataFrame, policies: list[dict],
     for i, cfg in prob:
         udf = probabilistic_keep_udf(cfg.get("hash_salt", ""),
                                      float(cfg["sampling_percentage"]))
-        traces = traces.withColumn(f"_pk{i}", udf(F.col(trace_col)))
+        traces = traces.withColumn(f"_pk{i}",
+                                    udf(F.col(trace_col).cast("string")))
 
     for i, cfg in post_rate:
         from pyspark.sql import Window as W

@@ -10,7 +10,10 @@ from opentelemetry_collector_contrib_spark.session import get_spark  # noqa: E40
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(master="local[8]", app_name="tests", shuffle_partitions=8)
+    # one worker thread per core the host grants (SPARK_GRAFT_CPUS);
+    # more threads than cores oversubscribe the pandas-UDF workers
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    s = get_spark(master=f"local[{cpus}]", app_name="tests", shuffle_partitions=8)
     yield s
     s.stop()
 

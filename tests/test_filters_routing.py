@@ -307,3 +307,48 @@ def test_probabilistic_sampler_fnv_seed_exact(spark):
     again = probabilistic_sampler(pct, seed=seed,
                                   hash_fn="fnv_seed").apply(df2).count()
     assert again == len(kept)
+
+
+def test_probabilistic_sampler_fnv_seed_hex_rule(spark):
+    """fnv_seed hashes a field as raw bytes only when it is what Go's
+    hex.DecodeString accepts (pairs of hex digits, nothing else):
+    whitespace, odd lengths and the empty string hash their UTF-8
+    bytes, and a null is never kept."""
+    import hashlib
+    import re
+
+    from opentelemetry_collector_contrib_spark.functions.hashes import fnv1a_32
+    from opentelemetry_collector_contrib_spark.operators.filters import (
+        probabilistic_sampler)
+    hexes = [hashlib.md5(str(i).encode()).hexdigest() for i in range(200)]
+    vals = ([f"{h[:8]}  {h[8:16]}" for h in hexes[:100]]
+            + [f" {h[:12]} " for h in hexes[100:150]]
+            + [h[:7] for h in hexes[150:]]
+            + [h.upper() for h in hexes[:50]]
+            + ["  ", "", "zz"])
+    df = spark.createDataFrame([(v,) for v in vals] + [(None,)], "f string")
+    pct, seed = 25.0, 7
+    kept = [r["f"] for r in probabilistic_sampler(
+        pct, hash_field="f", seed=seed, hash_fn="fnv_seed").apply(df).collect()]
+    thr = int(pct * (1 << 14) / 100)
+    seed_b = seed.to_bytes(4, "little")
+
+    def kept_set(is_hex):
+        return sorted(
+            v for v in vals
+            if (fnv1a_32(seed_b + (bytes.fromhex(v) if is_hex(v)
+                                   else v.encode())) & 0x3FFF) < thr)
+
+    want = kept_set(lambda v: re.fullmatch(r"(?:[0-9a-fA-F]{2})+", v))
+    assert None not in kept
+    assert sorted(kept) == want
+    # the rule matters here: Python's looser bytes.fromhex picks another set
+    assert want != kept_set(_fromhex_ok)
+
+
+def _fromhex_ok(v: str) -> bool:
+    try:
+        bytes.fromhex(v)
+    except ValueError:
+        return False
+    return len(v) % 2 == 0 and bool(v)

@@ -74,6 +74,28 @@ def test_exact_hash_converters(spark, fixture_df):
     assert murmur3_32(b"abc") != murmur3_32(b"abd")
 
 
+def test_exact_hash_converters_null_in_batch(spark):
+    """A null in the same Arrow batch as the reference vectors hashes
+    to null and leaves every other row exact (a float64 detour once
+    rounded FNV's int64 results whenever a batch held a null)."""
+    df = spark.createDataFrame(
+        [("hello world",), (None,), ("",), ("Hello World",)],
+        "v string").coalesce(1)
+    rows = df.select(
+        "v", call("FNV", F.col("v")).alias("fnv"),
+        call("Murmur3Hash", F.col("v")).alias("m32"),
+        call("Murmur3Hash128", F.col("v")).alias("m128")).collect()
+    got = {r["v"]: (r["fnv"], r["m32"], r["m128"]) for r in rows}
+    assert got == {
+        "hello world": (8618312879776256743, "0f8f925e",
+                        "0e617feb46603f53b163eb607d4697ab"),
+        None: (None, None, None),
+        "": (-3750763034362895579, "00000000", "0" * 32),
+        "Hello World": (4420528118743043111, "ce837619",
+                        "dbc2a0c1ab26631a27b4c09fcf1fe683"),
+    }
+
+
 def test_time_family(spark, fixture_df):
     df = fixture_df
     ts = one(df, call("Time", F.lit("2024-03-01 12:30:45"), "%Y-%m-%d %H:%M:%S"))

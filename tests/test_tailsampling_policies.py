@@ -307,3 +307,29 @@ def test_always_sample_and_spans_preserved(spark):
         df, [{"name": "all", "type": "always_sample"}])
     assert out.count() == 3
     assert set(out.columns) == set(df.columns)
+
+
+def test_probabilistic_null_and_whitespace_trace_ids(spark):
+    """A null trace id is never kept, even at 100 % (it once hashed as
+    the text "None"); an id with whitespace is not hex to Go's
+    hex.DecodeString, so it hashes its UTF-8 bytes."""
+    from fractions import Fraction
+
+    from opentelemetry_collector_contrib_spark.functions.hashes import (
+        fnv1a_64)
+    from opentelemetry_collector_contrib_spark.operators.tailsampling import (
+        probabilistic_keep_udf)
+    ids = [f"{i:04x}  {i * 7:04x}" for i in range(64)] + ["  ", None]
+    df = spark.createDataFrame([(t,) for t in ids], "t string")
+
+    def keep(salt, pct):
+        udf = probabilistic_keep_udf(salt, pct)
+        return {r["t"]: r["k"]
+                for r in df.select("t", udf(F.col("t")).alias("k")).collect()}
+
+    assert keep("s", 100.0) == {t: t is not None for t in ids}
+    thr = int(Fraction((1 << 64) - 1) * Fraction(50.0 / 100.0))
+    want = {t: t is not None and fnv1a_64(b"s" + t.encode()) <= thr
+            for t in ids}
+    assert keep("s", 50.0) == want
+    assert 0 < sum(want.values()) < len(ids) - 1
