@@ -101,8 +101,8 @@ def main() -> None:
     # flagship pipeline throughput (docs/sec end-to-end incl. writes);
     # default 3 = one codegen warm-up + min of two measured runs — this
     # host swings ±20% between scheduler windows at 32 threads, so a
-    # single warm run under-reports steady state; raise further for the
-    # noise-robust min used by bench_scaling.py
+    # single warm run under-reports steady state; raise further for a
+    # noise-robust min
     repeats = int(os.environ.get("SPARK_GRAFT_REPEATS", "3"))
     pages = spark.read.parquet(pages_path)
     host_meta = spark.createDataFrame(gen_host_meta())

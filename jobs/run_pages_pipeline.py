@@ -6,7 +6,7 @@ Cluster usage (north_rule packaging):
     cd /root/repo && zip -r /tmp/otelspark.zip opentelemetry_collector_contrib_spark
     spark-submit --py-files /tmp/otelspark.zip jobs/run_pages_pipeline.py \
         --input s3://bucket/pages --output s3://bucket/out \
-        --buckets 4096 --groups 64 [--resume]
+        --buckets 4096 --groups 64   # a re-run resumes from the ledger
 
 Local smoke:
 
@@ -74,7 +74,7 @@ def main() -> int:
         counters = run_pipeline_checkpointed(
             spark, pages, args.output, host_meta=host_meta,
             lang_family=lang_family, n_buckets=args.buckets,
-            n_groups=args.groups)
+            n_groups=args.groups, on_error=args.on_error)
     print(json.dumps(counters))
     return 0
 

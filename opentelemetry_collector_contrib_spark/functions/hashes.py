@@ -214,8 +214,12 @@ def _byte_matrices(s: pd.Series, prefix: bytes = b"", raw_hex: bool = False):
     data, starts, lens, null = _utf8_spans(s, raw_hex)
     p = len(prefix)
     total = lens + p
-    cls = np.ceil(np.log2(total // 16 + 1)).astype(np.int64)
-    classes = np.unique(cls) if len(cls) else np.zeros(1, np.int64)
+    def width_class(n):
+        return np.ceil(np.log2(n // 16 + 1)).astype(np.int64)
+
+    cls = width_class(total)
+    # an empty batch's one group must still be wide enough for the prefix
+    classes = np.unique(cls) if len(cls) else width_class(np.array([p]))
     # zero tail: a row's gather may run up to a full width past its start
     data = np.concatenate([data, np.zeros(16 << int(classes[-1]), np.uint8)])
     out = []

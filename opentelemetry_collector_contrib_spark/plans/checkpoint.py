@@ -6,12 +6,13 @@ Save/Load of reader offsets through the storage extension) make
 ingest resumable without re-emitting rows.
 
 Spark-native shape: rows are bucketed by ``pmod(xxhash64(url), B)``;
-buckets are processed in G groups. Each group writes its output to an
-isolated ``group=<g>`` directory with overwrite semantics
-(idempotent: a re-run of a half-written group replaces it), then
-appends a ledger marker recording the group + its counters. Resume =
-read the ledger, skip completed groups. Lineage: every output row
-carries its bucket; the ledger carries per-group accepted/refused/
+buckets are processed in G groups. Each group is one call of the
+batch pipeline's ``write_unit`` (plans/pipeline.py) into isolated
+``routed/group=<g>`` and ``metrics/group=<g>`` directories with
+overwrite semantics (idempotent: a re-run of a half-written group
+replaces it), then a ledger marker records the group + its counters.
+Resume = read the ledger, skip completed groups. Lineage: every output
+row carries its bucket; the ledger carries per-group accepted/refused/
 sent — the obsreport analog persisted per unit of work.
 """
 
@@ -20,16 +21,13 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from opentelemetry_collector_contrib_spark.operators.base import PARSE_ERROR_COL
 from opentelemetry_collector_contrib_spark.plans.pipeline import (
-    DEFAULT_SINK,
-    PAGES_ROUTES,
-    enrich_pages,
-    parse_pages,
-    route_pages,
+    PAGES_SINKS,
+    routed_pages,
+    write_unit,
 )
 
 BUCKET_COL = "bucket"
@@ -67,7 +65,7 @@ def run_pipeline_checkpointed(
     lang_family: DataFrame | None = None,
     n_buckets: int = 64,
     n_groups: int = 4,
-    key_col: str = "url",
+    on_error: str = "send",
     fail_after_group: int | None = None,
 ) -> dict:
     """Resumable run. ``fail_after_group`` injects a crash for tests.
@@ -78,43 +76,24 @@ def run_pipeline_checkpointed(
     """
     os.makedirs(out_dir, exist_ok=True)
     bucketed = pages.withColumn(
-        BUCKET_COL, F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)))
+        BUCKET_COL, F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)))
+    routed = routed_pages(bucketed, host_meta, lang_family)
 
     done = completed_groups(out_dir)
-    sinks = [r.sink for r in PAGES_ROUTES] + [DEFAULT_SINK]
-
     for g in range(n_groups):
         if g in done:
             continue
-        part = bucketed.filter(F.pmod(F.col(BUCKET_COL), F.lit(n_groups)) == g)
-        parsed = parse_pages(part)
-        routed = route_pages(enrich_pages(parsed, host_meta, lang_family))
-
-        obs = Observation(f"obsreport_g{g}")
-        metrics = [F.count(F.lit(1)).alias("accepted"),
-                   F.sum(F.col(PARSE_ERROR_COL).cast("long")).alias("refused")]
-        for s in sinks:
-            metrics.append(F.sum((F.col("sink") == s).cast("long")).alias(f"sent_{s}"))
-        observed = routed.observe(obs, *metrics)
-
-        group_dir = os.path.join(out_dir, "routed", f"group={g}")
-        (observed.withColumn("attributes", F.map_entries(F.col("attributes")))
-         .repartition(F.col("sink"))
-         .write.mode("overwrite").partitionBy("sink").parquet(group_dir))
-
-        got = obs.get
-        counters = {
-            "group": g,
-            "accepted": got["accepted"],
-            "refused": int(got["refused"] or 0),
-            "sent": {s: int(got[f"sent_{s}"] or 0) for s in sinks},
-        }
-        mark_group(out_dir, g, counters)
+        part = routed.filter(F.pmod(F.col(BUCKET_COL), F.lit(n_groups)) == g)
+        counters = write_unit(spark, part,
+                              os.path.join(out_dir, "routed", f"group={g}"),
+                              os.path.join(out_dir, "metrics", f"group={g}"),
+                              on_error)
+        mark_group(out_dir, g, {"group": g, **counters})
         if fail_after_group is not None and g >= fail_after_group:
             raise RuntimeError(f"injected failure after group {g}")
 
     # merge ledger -> run totals
-    total = {"accepted": 0, "refused": 0, "sent": {s: 0 for s in sinks}}
+    total = {"accepted": 0, "refused": 0, "sent": {s: 0 for s in PAGES_SINKS}}
     for g in sorted(completed_groups(out_dir)):
         with open(os.path.join(ledger_dir(out_dir), f"group-{g}.json")) as f:
             c = json.load(f)

@@ -16,11 +16,17 @@ SURVEY.md §3.3) over the Common-Crawl-style ``pages`` table
   observe counters      ≈ obsreport accepted/refused/sent
                           (pkg/stanza/adapter/receiver.go:54-64)
 
-The whole pre-route section is ONE narrow Catalyst plan: no shuffle
-until the aggregates; the route write shuffles once on the sink tag
-(repartition by sink+bucket) so each output file group is written
-co-located. At 100 TB the same plan holds: scan -> codegen'd
-parse/enrich (broadcast joins only) -> single exchange.
+``routed_pages`` builds parse -> enrich -> route as ONE narrow Catalyst
+plan: broadcast joins only, no shuffle. ``write_unit`` writes it
+straight to per-sink partitions (no exchange: each scan task writes its
+own rows), then reads the written columns back for the aggregates and
+derives the counters from them; only the small aggregate shuffles.
+
+Every pages run shares this body: ``run_pipeline`` (one batch pass) and
+``plans/checkpoint.py::run_pipeline_checkpointed`` (one ``write_unit``
+per commit group) call ``routed_pages`` and ``write_unit``;
+``streaming/stream.py::stream_pages_pipeline`` calls ``routed_pages``
+and ``sink_rows`` under a streaming writer.
 """
 
 from __future__ import annotations
@@ -70,6 +76,7 @@ PAGES_ROUTES = [
     Route("path LIKE '/api/%'", "sink_api"),
 ]
 DEFAULT_SINK = "sink_default"
+PAGES_SINKS = [r.sink for r in PAGES_ROUTES] + [DEFAULT_SINK]
 
 
 def parse_pages(df: DataFrame, on_error: str = "send") -> DataFrame:
@@ -165,6 +172,79 @@ def sink_rows(routed: DataFrame) -> DataFrame:
         "attributes", F.map_entries(F.col("attributes")))
 
 
+def routed_pages(pages: DataFrame, host_meta: DataFrame | None = None,
+                 lang_family: DataFrame | None = None) -> DataFrame:
+    """pages -> parsed, enriched, sink-tagged records.
+
+    Parses in send mode so refused rows are still visible to the
+    counters (obsreport counts refused BEFORE the drop,
+    pkg/stanza/adapter/receiver.go:54-64); drop mode removes them in
+    ``write_unit`` after observation, before the sinks.
+    """
+    parsed = parse_pages(pages, on_error="send")
+    return route_pages(enrich_pages(parsed, host_meta, lang_family))
+
+
+def write_unit(spark: SparkSession, routed: DataFrame, routed_dir: str,
+               metrics_dir: str, on_error: str = "send") -> dict:
+    """Write one unit of routed records to per-sink partitions under
+    ``routed_dir``, aggregate them into ``metrics_dir`` and return the
+    obsreport-style counter dict for the unit.
+
+    No shuffle: each scan task writes its own rows, partitionBy splits
+    them per sink (sortWithinPartitions(sink) keeps one open writer per
+    task), so the routed bytes never pass through an exchange.
+    """
+    # obsreport counters: in send mode EVERY routed row (including
+    # refused ones) lands in the output, so the counters are exactly
+    # derivable from the column-pruned scan of the written parquet — the
+    # in-flight .observe() CollectMetrics node costs ~13% of the 8-core
+    # write job at 5M rows for information the output already holds.
+    # Drop mode (refused rows removed before the sinks) keeps the
+    # pre-drop observe.
+    drop_refused = on_error.startswith("drop")
+    if drop_refused:
+        obs = Observation("obsreport")
+        sent = [F.sum(((F.col("sink") == s) & ~F.col(PARSE_ERROR_COL)).cast("long"))
+                .alias(f"sent_{s}") for s in PAGES_SINKS]
+        routed = routed.observe(
+            obs, F.count(F.lit(1)).alias("accepted"),
+            F.sum(F.col(PARSE_ERROR_COL).cast("long")).alias("refused"), *sent,
+        ).filter(~F.col(PARSE_ERROR_COL))
+
+    writable = sink_rows(routed)
+    (writable.sortWithinPartitions("sink")
+     .write.mode("overwrite").partitionBy("sink").parquet(routed_dir))
+    # aggregates scan the just-written columnar output (column-pruned
+    # scan of 4 small columns) instead of recomputing the parse chain.
+    # The obsreport counters derive from the aggregate rows themselves:
+    # in send mode every routed row is in the output, so accepted =
+    # record.count + refused.count (the record metric excludes
+    # status-less refused rows via the presence rule) and per-sink sent
+    # decomposes the same way.  Observation on the post-aggregation
+    # frame touches ~dozens of rows.  The known schema skips inference,
+    # which would fail on a unit that wrote no rows.
+    back = spark.read.schema(writable.schema).parquet(routed_dir)
+    agg_obs = Observation("obsreport_aggs")
+    name, val = F.col("metric_name"), F.col("value")
+    rec = F.when(name == "log.record.count", val)
+    ref = F.when(name == "log.refused.count", val)
+    aggregate_pages(back).observe(
+        agg_obs,
+        F.sum(F.coalesce(rec, ref)).alias("accepted"),
+        F.sum(ref).alias("refused"),
+        *[F.sum(F.when(F.col("sink") == s, F.coalesce(rec, ref)))
+          .alias(f"sent_{s}") for s in PAGES_SINKS],
+    ).write.mode("overwrite").parquet(metrics_dir)
+
+    got = (obs if drop_refused else agg_obs).get
+    return {
+        "accepted": int(got["accepted"] or 0),
+        "refused": int(got["refused"] or 0),
+        "sent": {s: int(got[f"sent_{s}"] or 0) for s in PAGES_SINKS},
+    }
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -172,120 +252,14 @@ def run_pipeline(
     host_meta: DataFrame | None = None,
     lang_family: DataFrame | None = None,
     on_error: str = "send",
-    write: bool = True,
-    write_mode: str = "auto",
 ) -> dict:
     """Execute the full DAG once (no checkpointing; see
-    plans/checkpoint.py for the resumable variant). Returns the
-    obsreport-style counter dict.
-
-    ``write_mode`` picks the fan-out write strategy:
-
-    - ``direct``: no shuffle — each scan task writes its own rows,
-      partitionBy splits them per sink (sortWithinPartitions(sink)
-      keeps one open writer per task). Output file count ≈
-      tasks × sinks-per-task. The whole pipeline is then ONE job with
-      zero exchanges: at any scale the routed bytes are never
-      serialized through a shuffle, which measures 15-35% faster
-      end-to-end at 4 sinks.
-    - ``repartition``: one shuffle on (sink, url-bucket) bounding the
-      output to ~2×parallelism files regardless of task count. At
-      100 TB with ~800k scan tasks and a LARGE sink fan-out (routing
-      tables with hundreds of sinks), direct mode would emit
-      tasks × sinks small files and thrash the dynamic-partition
-      writers; the bounded shuffle is worth its cost there.
-    - ``auto`` (default): direct for ≤8 sinks, repartition beyond.
-    """
-    # Parse in send mode so refused rows are still visible to the
-    # counters (obsreport counts refused BEFORE the drop,
-    # pkg/stanza/adapter/receiver.go:54-64); drop-mode removes them
-    # after observation, before the sinks.
-    parsed = parse_pages(pages, on_error="send")
-    enriched = enrich_pages(parsed, host_meta, lang_family)
-    routed = route_pages(enriched)
-
-    sinks = [r.sink for r in PAGES_ROUTES] + [DEFAULT_SINK]
-    drop_refused = on_error.startswith("drop")
-    # obsreport counters: in send mode with a real sink write, EVERY
-    # routed row (including refused ones) lands in the output, so the
-    # counters are exactly derivable from the column-pruned scan of the
-    # written parquet — the in-flight .observe() CollectMetrics node
-    # costs ~13% of the 8-core write job at 5M rows for information the
-    # output already holds. Drop mode (refused rows removed before the
-    # sinks) and noop runs keep the pre-drop observe.
-    use_observe = drop_refused or not write
-    if use_observe:
-        obs = Observation("obsreport")
-        metrics = [F.count(F.lit(1)).alias("accepted"),
-                   F.sum(F.col(PARSE_ERROR_COL).cast("long")).alias("refused")]
-        for s in sinks:
-            sent = (F.col("sink") == s)
-            if drop_refused:
-                sent = sent & ~F.col(PARSE_ERROR_COL)
-            metrics.append(F.sum(sent.cast("long")).alias(f"sent_{s}"))
-        observed = routed.observe(obs, *metrics)
-        if drop_refused:
-            observed = observed.filter(~F.col(PARSE_ERROR_COL))
-    else:
-        observed = routed
-
-    writable = sink_rows(observed)
-    routed_dir = os.path.join(out_dir, "routed")
-    if write:
-        direct = (write_mode == "direct"
-                  or (write_mode == "auto" and len(sinks) <= 8))
-        if direct:
-            out = writable.sortWithinPartitions("sink")
-        else:
-            # bucket count scales with the cluster so write parallelism
-            # is not limited to one task per sink
-            n_write = spark.sparkContext.defaultParallelism * 2
-            out = writable.repartition(
-                n_write, F.col("sink"),
-                F.pmod(F.xxhash64("url"), F.lit(n_write)))
-        out.write.mode("overwrite").partitionBy("sink").parquet(routed_dir)
-        # aggregates scan the just-written columnar output (column-pruned
-        # scan of 4 small columns) instead of recomputing the parse chain.
-        # The obsreport counters derive from the aggregate rows
-        # themselves: in send mode every routed row is in the output,
-        # so accepted = record.count + refused.count (the record metric
-        # excludes status-less refused rows via the presence rule) and
-        # per-sink sent decomposes the same way.  Observation on the
-        # post-aggregation frame touches ~dozens of rows — unlike the
-        # r1 row-level observe() (13% of the write job at 5M rows) or
-        # the r2 separate counters scan (a third job, -18% flagship).
-        back = spark.read.parquet(routed_dir)
-        aggs = aggregate_pages(back)
-        agg_obs = Observation("obsreport_aggs")
-        name, val = F.col("metric_name"), F.col("value")
-        rec = F.when(name == "log.record.count", val)
-        ref = F.when(name == "log.refused.count", val)
-        aggs = aggs.observe(
-            agg_obs,
-            F.sum(F.coalesce(rec, ref)).alias("accepted"),
-            F.sum(ref).alias("refused"),
-            *[F.sum(F.when(F.col("sink") == s, F.coalesce(rec, ref)))
-              .alias(f"sent_{s}") for s in sinks])
-        aggs.write.mode("overwrite").parquet(os.path.join(out_dir, "metrics"))
-    else:
-        writable.write.format("noop").mode("overwrite").save()
-        aggregate_pages(routed).write.format("noop").mode("overwrite").save()
-
-    if use_observe:
-        got = obs.get
-        counters = {
-            "accepted": got["accepted"],
-            "refused": int(got["refused"] or 0),
-            "sent": {s: int(got[f"sent_{s}"] or 0) for s in sinks},
-        }
-    else:
-        got = agg_obs.get
-        counters = {
-            "accepted": int(got["accepted"] or 0),
-            "refused": int(got["refused"] or 0),
-            "sent": {s: int(got[f"sent_{s}"] or 0) for s in sinks},
-        }
-    if write:
-        with open(os.path.join(out_dir, "counters.json"), "w") as f:
-            json.dump(counters, f, indent=2, sort_keys=True)
+    plans/checkpoint.py for the resumable variant). Writes
+    ``routed/sink=<s>/``, ``metrics/`` and ``counters.json`` under
+    ``out_dir`` and returns the obsreport-style counter dict."""
+    counters = write_unit(spark, routed_pages(pages, host_meta, lang_family),
+                          os.path.join(out_dir, "routed"),
+                          os.path.join(out_dir, "metrics"), on_error)
+    with open(os.path.join(out_dir, "counters.json"), "w") as f:
+        json.dump(counters, f, indent=2, sort_keys=True)
     return counters

@@ -10,7 +10,8 @@ for the operators whose semantics are interval/flush-driven:
 - tumbling-window count/sum connector aggregates with a watermark
   (late-data rule replacing logdedup/spanmetrics flush tickers,
   processor/logdedupprocessor/processor.go:138-157)
-- routed fan-out via foreachBatch (per-sink writers share one pass,
+- the flagship parse -> enrich -> route DAG as an availableNow drain
+  with per-sink partitioned output (one pass fans out to every sink,
   exactly the routing connector's per-consumer groups)
 
 All transformations reuse the batch operator library — the DataFrame
@@ -23,11 +24,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from opentelemetry_collector_contrib_spark.operators.routing import (
-    Route,
-    route_tag_expr,
-)
 
 PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
                 "text string, lang string")
@@ -50,29 +46,6 @@ def windowed_counts(
                     *(group_by or []), "value"))
 
 
-def routed_stream_writer(
-    tagged: DataFrame,
-    routes: list[Route],
-    out_dir: str,
-    checkpoint_dir: str,
-    default: str = "default",
-):
-    """writeStream with per-sink partitioned output.
-
-    One pass per micro-batch: the sink tag is a column, the writer
-    partitions by it — same single-scan fan-out as batch. Spark's own
-    streaming checkpoint (WAL + source offsets) replaces the batch
-    ledger for exactly-once file output.
-    """
-    withtag = tagged.withColumn("sink", route_tag_expr(routes, default))
-    return (withtag.writeStream
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .partitionBy("sink")
-            .trigger(availableNow=True))
-
-
 def stream_pages_pipeline(
     spark: SparkSession,
     pages_dir: str,
@@ -91,23 +64,20 @@ def stream_pages_pipeline(
     checkpoint — the fileconsumer offset ledger,
     pkg/stanza/fileconsumer/file.go:94-166) and appends routed rows to
     per-sink partitions exactly once. The transformation chain is the
-    UNMODIFIED batch operator pipeline (parse_pages/enrich_pages/
-    route_pages/sink_rows) — DataFrame code is source-agnostic, so
-    batch and streaming cannot drift apart.
+    batch pipeline's own ``routed_pages`` and ``sink_rows`` —
+    DataFrame code is source-agnostic, so batch and streaming cannot
+    drift apart.
 
     Returns obsreport-style counters for THIS drain: ``accepted`` from
     the query's own progress (numInputRows summed over micro-batches).
     """
     from opentelemetry_collector_contrib_spark.plans.pipeline import (
-        enrich_pages,
-        parse_pages,
-        route_pages,
+        routed_pages,
         sink_rows,
     )
 
     stream = spark.readStream.schema(PAGES_SCHEMA).parquet(pages_dir)
-    routed = route_pages(enrich_pages(parse_pages(stream),
-                                      host_meta, lang_family))
+    routed = routed_pages(stream, host_meta, lang_family)
     q = (sink_rows(routed).writeStream
          .format("parquet")
          .option("path", os.path.join(out_dir, "routed"))
@@ -119,14 +89,3 @@ def stream_pages_pipeline(
     accepted = sum(int(p["numInputRows"]) for p in q.recentProgress)
     return {"accepted": accepted}
 
-
-def stream_pipeline_available_now(spark, in_glob: str, out_dir: str,
-                                  checkpoint_dir: str, routes: list[Route],
-                                  schema: str) -> None:
-    """Batch-like drain of a stream source (Trigger.AvailableNow): the
-    streaming analog of one checkpointed batch run — processes all
-    currently-available files then stops, offsets recorded so the next
-    invocation resumes where this one stopped."""
-    stream = spark.readStream.schema(schema).parquet(in_glob)
-    q = routed_stream_writer(stream, routes, out_dir, checkpoint_dir).start()
-    q.awaitTermination()

@@ -3,6 +3,7 @@ the synthetic pages table, verified against an independent pandas
 golden (routed-row equality + per-sink aggregate counts + obsreport
 counters), plus checkpoint/resume semantics (F7)."""
 
+import json
 import os
 
 import pandas as pd
@@ -130,3 +131,80 @@ def test_checkpoint_resume(spark, pages_df, golden, tmp_path):
     exp = golden.sink.value_counts().to_dict()
     assert got == exp
     assert counters["accepted"] == len(golden)
+
+
+def test_checkpoint_output_matches_batch(spark, pages_df, tmp_path):
+    """Every pages run writes the same rows and schema: the resumable
+    output is the batch output plus its ``bucket`` lineage column and
+    ``group`` partition, row for row, and its per-group metrics add up
+    to the batch run's."""
+    batch_dir, ck_dir = str(tmp_path / "batch"), str(tmp_path / "ckpt")
+    enrich = dict(host_meta=spark.createDataFrame(gen_host_meta()),
+                  lang_family=spark.createDataFrame(gen_lang_family()))
+    run_pipeline(spark, pages_df, batch_dir, **enrich)
+    run_pipeline_checkpointed(spark, pages_df, ck_dir, n_groups=4, **enrich)
+
+    batch = spark.read.parquet(os.path.join(batch_dir, "routed"))
+    ck = spark.read.parquet(os.path.join(ck_dir, "routed"))
+    assert sorted(ck.columns) == sorted(batch.columns + ["bucket", "group"])
+    assert {c: t for c, t in ck.dtypes if c not in ("bucket", "group")} \
+        == dict(batch.dtypes)
+    ck_rows = ck.select(*batch.columns)
+    assert ck_rows.count() == batch.count() == pages_df.count()
+    assert ck_rows.exceptAll(batch).count() == 0
+    assert batch.exceptAll(ck_rows).count() == 0
+
+    def records(out):
+        mets = spark.read.parquet(os.path.join(out, "metrics"))
+        return {(r["sink"], r["status"]): r["v"] for r in mets
+                .filter(F.col("metric_name") == "log.record.count")
+                .groupBy("sink", "status").agg(F.sum("value").alias("v"))
+                .collect()}
+
+    assert os.path.isdir(os.path.join(ck_dir, "metrics", "group=0"))
+    assert records(ck_dir) == records(batch_dir)
+
+
+def test_checkpoint_drop_mode_matches_batch(spark, pages_df, golden, tmp_path):
+    """``on_error="drop"`` reaches the resumable path: refused rows are
+    counted before the drop and never written, and the ledger totals
+    equal a drop-mode batch run's counters."""
+    batch_dir, ck_dir = str(tmp_path / "batch"), str(tmp_path / "ckpt")
+    want = run_pipeline(spark, pages_df, batch_dir, on_error="drop")
+    # the resumable run returns the totals it merged from its ledger
+    got = run_pipeline_checkpointed(spark, pages_df, ck_dir, n_groups=4,
+                                    on_error="drop")
+    assert want["refused"] == int(golden.parse_error.sum()) > 0
+    assert got == want
+
+    back = spark.read.parquet(os.path.join(ck_dir, "routed"))
+    assert back.filter(F.col("_parse_error")).count() == 0
+    assert back.count() == len(golden) - int(golden.parse_error.sum())
+
+
+@pytest.mark.parametrize("on_error", ["send", "drop"])
+def test_empty_input_gives_zero_counters(spark, pages_df, tmp_path, on_error):
+    """An empty pages frame is a run with nothing in it, not a failed
+    read-back."""
+    out = str(tmp_path / "out")
+    counters = run_pipeline(spark, pages_df.limit(0), out, on_error=on_error)
+    assert counters["accepted"] == counters["refused"] == 0
+    assert set(counters["sent"].values()) == {0}
+    with open(os.path.join(out, "counters.json")) as f:
+        assert json.load(f) == counters
+
+
+def test_checkpoint_survives_empty_groups(spark, pages_df, tmp_path):
+    """Two rows over eight commit groups leave at least six groups
+    empty; each still commits a ledger marker with zero counters."""
+    out = str(tmp_path / "ckpt")
+    counters = run_pipeline_checkpointed(spark, pages_df.limit(2), out,
+                                         n_groups=8)
+    assert counters["accepted"] == 2
+    assert sum(counters["sent"].values()) == 2
+    ledger = os.path.join(out, "_ledger")
+    groups = []
+    for name in os.listdir(ledger):
+        with open(os.path.join(ledger, name)) as f:
+            groups.append(json.load(f)["accepted"])
+    assert len(groups) == 8 and groups.count(0) >= 6

@@ -42,7 +42,8 @@ def test_filter_and_column_pushdown(spark, pages_parquet):
 
 def test_parse_chain_is_narrow_no_shuffle(spark, pages_parquet):
     """Scan -> parse -> route must contain ZERO exchanges: at 100 TB the
-    first shuffle is the per-sink write repartition, nothing earlier."""
+    first shuffle is the aggregate over the written sinks, nothing
+    earlier."""
     df = spark.read.parquet(pages_parquet)
     routed = route_pages(parse_pages(df))
     plan = _plan(routed)
@@ -51,11 +52,10 @@ def test_parse_chain_is_narrow_no_shuffle(spark, pages_parquet):
 
 
 def test_direct_write_plan_has_no_shuffle_at_all(spark, pages_parquet):
-    """With write_mode=direct (default at <=8 sinks) the ENTIRE routed
-    write plan — scan -> parse -> enrich -> route -> project -> sort
-    within partitions — has zero non-broadcast exchanges: the routed
-    bytes are never serialized through a shuffle on the way to the
-    sinks."""
+    """The ENTIRE routed write plan of ``write_unit`` — scan -> parse ->
+    enrich -> route -> project -> sort within partitions — has zero
+    non-broadcast exchanges: the routed bytes are never serialized
+    through a shuffle on the way to the sinks."""
     from opentelemetry_collector_contrib_spark.plans.pipeline import sink_rows
     df = spark.read.parquet(pages_parquet)
     writable = sink_rows(route_pages(parse_pages(df))) \

@@ -11,7 +11,7 @@ import re
 
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from opentelemetry_collector_contrib_spark.functions import hashes as H
 from opentelemetry_collector_contrib_spark.operators import anomaly as A
@@ -57,6 +57,7 @@ def _spec(scalar, values, prefix=b"", raw_hex=False):
 
 @settings(max_examples=150, deadline=None)
 @given(batches, prefixes)
+@example([], bytes(17))  # empty batch, prefix wider than one 16-byte block
 def test_hash_kernels_equal_scalar_spec(values, prefix):
     s = pd.Series(values, dtype=object)
     for kernel, scalar in KERNELS:

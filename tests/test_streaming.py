@@ -1,15 +1,11 @@
 """Structured Streaming shapes: file-source ingest, windowed counts
-with watermark, routed fan-out with availableNow drain + resume."""
+with watermark, the flagship DAG as an availableNow drain + resume."""
 
 import os
 
 from pyspark.sql import functions as F
 
-from opentelemetry_collector_contrib_spark.operators.routing import Route
-from opentelemetry_collector_contrib_spark.streaming.stream import (
-    stream_pipeline_available_now,
-    windowed_counts,
-)
+from opentelemetry_collector_contrib_spark.streaming.stream import windowed_counts
 
 SCHEMA = "id long, observed_time timestamp, kind string"
 
@@ -106,21 +102,3 @@ def test_pages_stream_windowed_sink_counts(spark, tmp_path):
             .agg(F.count(F.lit(1)).alias("cnt")).collect()}
     assert got == want and sum(got.values()) == 300
 
-
-def test_routed_stream_resume(spark, tmp_path):
-    """availableNow drain twice: second run only processes new files
-    (source offsets in the streaming checkpoint — the filelog offset
-    checkpoint analog)."""
-    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
-    routes = [Route("kind = 'a'", "sink_a")]
-    _write_batch(spark, src, 0, 40)
-    stream_pipeline_available_now(spark, src, out, ckpt, routes, SCHEMA)
-    n1 = spark.read.parquet(out).count()
-    assert n1 == 40
-    _write_batch(spark, src, 40, 10)
-    stream_pipeline_available_now(spark, src, out, ckpt, routes, SCHEMA)
-    back = spark.read.parquet(out)
-    assert back.count() == 50  # no reprocessing of the first 40
-    sinks = {r["sink"] for r in back.select("sink").distinct().collect()}
-    assert sinks == {"sink_a", "default"}
-    assert back.select("id").distinct().count() == 50
