@@ -205,25 +205,6 @@ def gen_host_meta() -> pd.DataFrame:
     )
 
 
-def gen_ip_geo(n_ranges: int = 500, seed: int = SEED) -> pd.DataFrame:
-    """F5 lookup: non-overlapping IPv4 integer ranges -> geo (analog of
-    the geoip MaxMind lookup, processor/geoipprocessor/geoip_processor.go:57-90)."""
-    ids = np.arange(n_ranges, dtype=np.int64)
-    span = (2**32 - 2) // n_ranges
-    starts = ids * span + 1 + (_mix(ids, 71, seed) % np.uint64(span // 4)).astype(np.int64)
-    ends = starts + (_mix(ids, 72, seed) % np.uint64(span // 2)).astype(np.int64) + 1
-    countries = np.array(["US", "DE", "FR", "CN", "BR", "IN", "JP", "GB", "NL", "AU"])
-    cities = np.array(["c%02d" % i for i in range(100)])
-    return pd.DataFrame(
-        {
-            "ip_start": starts,
-            "ip_end": ends,
-            "country": countries[_randint(ids, 73, seed, 0, len(countries))],
-            "city": cities[_randint(ids, 74, seed, 0, len(cities))],
-        }
-    )
-
-
 def gen_lang_family() -> pd.DataFrame:
     fam = {
         "en": "germanic", "de": "germanic", "nl": "germanic",

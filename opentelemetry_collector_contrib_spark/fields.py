@@ -79,10 +79,3 @@ def drop_field(df: DataFrame, path: str) -> DataFrame:
     return df.withColumn(
         root, F.map_filter(F.col(root), lambda k, _v: k != F.lit(key))
     )
-
-
-def field_exists(path: str) -> Column:
-    root, key = split_path(path)
-    if key is None:
-        return F.col(root).isNotNull()
-    return F.coalesce(F.map_contains_key(F.col(root), key), F.lit(False))

@@ -216,29 +216,6 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
             .select("id_a", "id_b", "est_jaccard").distinct())
 
 
-def simhash_expr(col: Column, bits: int = 64) -> Column:
-    """SimHash: per-token 64-bit hash; bit j of the result is the sign
-    of sum over tokens of (+1 if token-hash bit j else -1). Native
-    fold via aggregate+zip_with (no UDF)."""
-    toks = tokens_expr(col)
-    # hash each token once, then fold bit-sign vectors (static bit
-    # positions so everything stays a plain codegen'd expression)
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-
-    def bit_vec(h: Column) -> Column:
-        return F.array(*[
-            F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, F.lit(1))
-            .otherwise(F.lit(-1))
-            for j in range(bits)
-        ])
-
-    acc = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), bits),
-        lambda a, h: F.zip_with(a, bit_vec(h), lambda x, y: x + y))
-    return _pack_sign_bits(acc, bits)
-
-
 def _pack_sign_bits(acc: Column, bits: int = 64) -> Column:
     """ARRAY<INT> sign counters -> packed LONG. ``acc`` should be a
     bound column: it is referenced once per bit."""
@@ -257,7 +234,7 @@ def with_simhash(df: DataFrame, text_col: str, out_col: str = "simhash",
                  bits: int = 64, hash_fn: str = "xxhash64") -> DataFrame:
     """Staged SimHash: tokenize -> per-token hash -> bit-count fold ->
     pack, each step its own projection so nothing re-evaluates
-    (an inline simhash_expr references the fold 64x in the packing).
+    (packing an inline fold would reference it once per bit, 64x).
 
     hash_fn="xxhash64" (default): per-token native hash, packed LONG out.
     hash_fn="md5": per-token bits come from the first 16 hex chars of

@@ -93,11 +93,6 @@ def metrics_generation(df: DataFrame, name_col: str, value_col: str,
             .withColumn(name_col, F.lit(out_name)))
 
 
-def scale_metric(df: DataFrame, value_col: str, factor: float) -> DataFrame:
-    """metricstransform experimental_scale_value."""
-    return df.withColumn(value_col, F.col(value_col) * F.lit(factor))
-
-
 def metrics_transform(df: DataFrame, rules: list[dict],
                       name_col: str = "metric_name") -> DataFrame:
     """metricstransform processor label/name operations

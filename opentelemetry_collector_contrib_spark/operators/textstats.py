@@ -75,25 +75,6 @@ def fingerprint_md5(text: Column) -> Column:
     return F.md5(normalize_text(text).cast("binary"))
 
 
-def fingerprint_winnow(text: Column, ngram: int = 8) -> Column:
-    """Rolling-hash document fingerprint: min xxhash64 over character
-    8-grams of the normalized text (winnowing's min-in-window reduced
-    to global min — a stable content signature robust to reordering
-    of a few tokens)."""
-    from opentelemetry_collector_contrib_spark.operators.dedup import normalize_text
-
-    # Bind the normalization chain to a lambda variable via a 1-element
-    # array so it evaluates ONCE per row: referencing the inline regex
-    # chain from the per-gram lambda would make Catalyst re-evaluate it
-    # per character position — O(len^2) (the CLAUDE.md trap).
-    def grams(n: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.greatest(F.length(n) - ngram + 1, F.lit(1)))
-        return F.transform(idx, lambda i: F.xxhash64(n.substr(i, F.lit(ngram))))
-
-    return F.array_min(
-        F.element_at(F.transform(F.array(normalize_text(text)), grams), 1))
-
-
 def gopher_quality_flags(df: DataFrame, text_col: str = "text",
                          id_col: str = "doc_id") -> DataFrame:
     """Gopher-rule document quality flags (Rae et al. 2021 §A1.1, the

@@ -153,11 +153,6 @@ def unquote(field: str) -> Operator:
     return Operator("unquote", fn, {"field": field})
 
 
-def _sql_of(field: str) -> str:
-    root, key = split_path(field)
-    return root if key is None else f"{root}['{key}']"
-
-
 def regex_replace(field: str, pattern: str, replacement: str) -> Operator:
     """transformer/regexreplace/transformer.go; OTTL replace_pattern."""
 

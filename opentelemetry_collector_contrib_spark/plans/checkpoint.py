@@ -13,7 +13,9 @@ overwrite semantics (idempotent: a re-run of a half-written group
 replaces it), then a ledger marker records the group + its counters.
 Resume = read the ledger, skip completed groups. Lineage: every output
 row carries its bucket; the ledger carries per-group accepted/refused/
-sent — the obsreport analog persisted per unit of work.
+sent — the obsreport analog persisted per unit of work. The streaming
+drain (streaming/stream.py) commits each micro-batch the same way, with
+its batch id as the group.
 """
 
 from __future__ import annotations
@@ -57,6 +59,19 @@ def mark_group(out_dir: str, group: int, counters: dict) -> None:
     os.replace(tmp, os.path.join(d, f"group-{group}.json"))  # atomic commit
 
 
+def ledger_totals(out_dir: str, groups: list[int]) -> dict:
+    """Sum the ledger counters of ``groups`` into one run total."""
+    total = {"accepted": 0, "refused": 0, "sent": {s: 0 for s in PAGES_SINKS}}
+    for g in groups:
+        with open(os.path.join(ledger_dir(out_dir), f"group-{g}.json")) as f:
+            c = json.load(f)
+        total["accepted"] += c["accepted"]
+        total["refused"] += c["refused"]
+        for s, v in c["sent"].items():
+            total["sent"][s] = total["sent"].get(s, 0) + v
+    return total
+
+
 def run_pipeline_checkpointed(
     spark: SparkSession,
     pages: DataFrame,
@@ -74,6 +89,9 @@ def run_pipeline_checkpointed(
     from the ledger — a resumed run reports totals for the whole
     input).
     """
+    if n_buckets < 1 or n_groups < 1:
+        raise ValueError(f"n_buckets and n_groups must be >= 1, "
+                         f"got {n_buckets} and {n_groups}")
     os.makedirs(out_dir, exist_ok=True)
     bucketed = pages.withColumn(
         BUCKET_COL, F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)))
@@ -92,15 +110,7 @@ def run_pipeline_checkpointed(
         if fail_after_group is not None and g >= fail_after_group:
             raise RuntimeError(f"injected failure after group {g}")
 
-    # merge ledger -> run totals
-    total = {"accepted": 0, "refused": 0, "sent": {s: 0 for s in PAGES_SINKS}}
-    for g in sorted(completed_groups(out_dir)):
-        with open(os.path.join(ledger_dir(out_dir), f"group-{g}.json")) as f:
-            c = json.load(f)
-        total["accepted"] += c["accepted"]
-        total["refused"] += c["refused"]
-        for s, v in c["sent"].items():
-            total["sent"][s] = total["sent"].get(s, 0) + v
+    total = ledger_totals(out_dir, sorted(completed_groups(out_dir)))
     with open(os.path.join(out_dir, "counters.json"), "w") as f:
         json.dump(total, f, indent=2, sort_keys=True)
     return total

@@ -22,11 +22,11 @@ straight to per-sink partitions (no exchange: each scan task writes its
 own rows), then reads the written columns back for the aggregates and
 derives the counters from them; only the small aggregate shuffles.
 
-Every pages run shares this body: ``run_pipeline`` (one batch pass) and
+Every pages run shares this body: ``run_pipeline`` (one batch pass),
 ``plans/checkpoint.py::run_pipeline_checkpointed`` (one ``write_unit``
-per commit group) call ``routed_pages`` and ``write_unit``;
-``streaming/stream.py::stream_pages_pipeline`` calls ``routed_pages``
-and ``sink_rows`` under a streaming writer.
+per commit group) and ``streaming/stream.py::stream_pages_pipeline``
+(one ``write_unit`` per micro-batch) call ``routed_pages`` and
+``write_unit``.
 """
 
 from __future__ import annotations
@@ -158,8 +158,8 @@ def aggregate_pages(routed: DataFrame) -> DataFrame:
 
 
 def sink_rows(routed: DataFrame) -> DataFrame:
-    """Project routed records to the written sink-row shape (shared by
-    the batch writer and the streaming writer).
+    """Project routed records to the written sink-row shape (the rows
+    ``write_unit`` writes).
 
     Drops the raw page bytes (html/body duplicate `text`, and `rest` is
     the tail already fully decomposed into kv+json fields — at 100 TB,

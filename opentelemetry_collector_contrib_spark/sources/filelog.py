@@ -40,28 +40,6 @@ def read_text_lines(spark: SparkSession, path_glob: str,
     return df
 
 
-def read_json_lines(spark: SparkSession, path_glob: str,
-                    schema: str | None = None) -> DataFrame:
-    """JSON-lines ingest (otlpjsonfile receiver family): schema-on-read
-    when a schema is given, else body stays a raw string for the
-    json_parser operator."""
-    if schema:
-        return spark.read.schema(schema).json(path_glob)
-    return _to_entries(spark.read.text(path_glob))
-
-
-def stream_text_lines(spark: SparkSession, path_glob: str,
-                      max_files_per_trigger: int = 100) -> DataFrame:
-    """Structured Streaming variant — true tail semantics with Spark's
-    own checkpointed file tracking (the fileconsumer poll loop,
-    pkg/stanza/fileconsumer/file.go:94-166, replaced by the
-    maxFilesPerTrigger-paced source)."""
-    df = (spark.readStream
-          .option("maxFilesPerTrigger", max_files_per_trigger)
-          .text(path_glob))
-    return _to_entries(df)
-
-
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
     """The Common-Crawl-style pages table (BASELINE.json input_hint).
     Reads Iceberg when the catalog is configured; plain parquet

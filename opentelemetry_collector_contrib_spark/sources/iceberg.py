@@ -51,16 +51,3 @@ def write_routed(df: DataFrame, table: str, url_buckets: int = 64,
         writer.createOrReplace()
     else:
         writer.append()
-
-
-def overwrite_group(df: DataFrame, table: str, group: int, n_groups: int) -> None:
-    """Idempotent per-group commit on Iceberg: dynamic overwrite of the
-    group's bucket partitions (REPLACE WHERE) — the transactional
-    equivalent of the checkpoint ledger's isolated group dirs."""
-    spark = df.sparkSession
-    if not iceberg_available(spark):
-        raise RuntimeError("no Iceberg catalog on the classpath")
-    df.createOrReplaceTempView("_grp_commit")
-    spark.sql(
-        f"INSERT OVERWRITE {table} "
-        f"SELECT * FROM _grp_commit WHERE pmod(bucket, {n_groups}) = {group}")

@@ -4,15 +4,12 @@ The reference is a push-stream DAG (SURVEY §1.2); the batch engine
 covers the north_rule, and this module provides the streaming shapes
 for the operators whose semantics are interval/flush-driven:
 
-- streaming ingest (readStream over a file glob = filelog tail,
-  maxFilesPerTrigger pacing ≈ the 200 ms poll loop,
-  pkg/stanza/fileconsumer/file.go:94-166)
 - tumbling-window count/sum connector aggregates with a watermark
   (late-data rule replacing logdedup/spanmetrics flush tickers,
   processor/logdedupprocessor/processor.go:138-157)
-- the flagship parse -> enrich -> route DAG as an availableNow drain
-  with per-sink partitioned output (one pass fans out to every sink,
-  exactly the routing connector's per-consumer groups)
+- the flagship DAG as an availableNow file-source drain (the filelog
+  tail, pkg/stanza/fileconsumer/file.go:94-166) whose micro-batches
+  each commit through the batch pipeline's ``write_unit``
 
 All transformations reuse the batch operator library — the DataFrame
 API is the same; only source/sink/trigger differ.
@@ -24,6 +21,15 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from opentelemetry_collector_contrib_spark.plans.checkpoint import (
+    ledger_totals,
+    mark_group,
+)
+from opentelemetry_collector_contrib_spark.plans.pipeline import (
+    routed_pages,
+    write_unit,
+)
 
 PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
                 "text string, lang string")
@@ -62,30 +68,28 @@ def stream_pages_pipeline(
     Each invocation drains the page files that arrived since the last
     run (Trigger.AvailableNow; source offsets live in the streaming
     checkpoint — the fileconsumer offset ledger,
-    pkg/stanza/fileconsumer/file.go:94-166) and appends routed rows to
-    per-sink partitions exactly once. The transformation chain is the
-    batch pipeline's own ``routed_pages`` and ``sink_rows`` —
-    DataFrame code is source-agnostic, so batch and streaming cannot
-    drift apart.
+    pkg/stanza/fileconsumer/file.go:94-166). Each micro-batch is one
+    commit unit of the resumable run (plans/checkpoint.py) with its
+    batch id as the group: ``write_unit`` into ``routed/group=<id>`` and
+    ``metrics/group=<id>``, then ``mark_group``. A batch that Spark
+    replays after a crash overwrites its own unit: exactly once.
 
-    Returns obsreport-style counters for THIS drain: ``accepted`` from
-    the query's own progress (numInputRows summed over micro-batches).
+    Returns the counters summed over the batches THIS drain committed.
     """
-    from opentelemetry_collector_contrib_spark.plans.pipeline import (
-        routed_pages,
-        sink_rows,
-    )
+    committed = []
 
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(pages_dir)
-    routed = routed_pages(stream, host_meta, lang_family)
-    q = (sink_rows(routed).writeStream
-         .format("parquet")
-         .option("path", os.path.join(out_dir, "routed"))
+    def commit(batch: DataFrame, batch_id: int) -> None:
+        counters = write_unit(
+            spark, routed_pages(batch, host_meta, lang_family),
+            os.path.join(out_dir, "routed", f"group={batch_id}"),
+            os.path.join(out_dir, "metrics", f"group={batch_id}"))
+        mark_group(out_dir, batch_id, {"group": batch_id, **counters})
+        committed.append(batch_id)
+
+    q = (spark.readStream.schema(PAGES_SCHEMA).parquet(pages_dir)
+         .writeStream.foreachBatch(commit)
          .option("checkpointLocation", checkpoint_dir)
-         .partitionBy("sink")
          .trigger(availableNow=True)
          .start())
     q.awaitTermination()
-    accepted = sum(int(p["numInputRows"]) for p in q.recentProgress)
-    return {"accepted": accepted}
-
+    return ledger_totals(out_dir, committed)

@@ -1,8 +1,9 @@
 """Crash/resume drill: run the checkpointed pipeline in a subprocess,
-kill -9 it mid-run (real crash: half-written group dirs, no cleanup),
-then resume and verify zero duplicate / zero missing rows per sink.
+kill -9 it as soon as its first commit group lands in the ledger (real
+crash: half-written group dirs, no cleanup), then resume and verify
+zero duplicate / zero missing rows per sink.
 
-Usage: python scripts/chaos_resume.py [rows] [kill_after_sec]
+Usage: python scripts/chaos_resume.py [rows]
 """
 
 import json
@@ -15,7 +16,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 ROWS = int(sys.argv[1]) if len(sys.argv) > 1 else 300_000
-KILL_AFTER = float(sys.argv[2]) if len(sys.argv) > 2 else 12.0
+GROUPS = 8
+MASTER = f"local[{os.environ.get('SPARK_GRAFT_CPUS') or len(os.sched_getaffinity(0))}]"
 
 
 def main() -> int:
@@ -29,15 +31,22 @@ def main() -> int:
 
     cmd = [sys.executable, "jobs/run_pages_pipeline.py",
            "--input", pages_dir, "--output", out,
-           "--groups", "8", "--master", "local[8]"]
-    print(f"[chaos] starting victim, kill -9 after {KILL_AFTER}s", flush=True)
+           "--groups", str(GROUPS), "--master", MASTER]
+    print("[chaos] starting victim, kill -9 after its first commit",
+          flush=True)
     victim = subprocess.Popen(cmd, stdout=subprocess.DEVNULL,
                               stderr=subprocess.DEVNULL)
-    time.sleep(KILL_AFTER)
+    ledger = os.path.join(out, "_ledger")
+
+    def committed() -> list[str]:
+        names = os.listdir(ledger) if os.path.isdir(ledger) else []
+        return sorted(n for n in names if n.startswith("group-"))
+
+    while victim.poll() is None and not committed():
+        time.sleep(0.05)
     victim.send_signal(signal.SIGKILL)
     victim.wait()
-    ledger = os.path.join(out, "_ledger")
-    done = sorted(os.listdir(ledger)) if os.path.isdir(ledger) else []
+    done = committed()
     print(f"[chaos] killed; completed groups at crash: {done}", flush=True)
 
     print("[chaos] resuming...", flush=True)
@@ -50,13 +59,14 @@ def main() -> int:
 
     # verify with a fresh session
     from opentelemetry_collector_contrib_spark.session import get_spark
-    spark = get_spark("local[8]", shuffle_partitions=8)
+    spark = get_spark(MASTER, shuffle_partitions=8)
     back = spark.read.parquet(os.path.join(out, "routed"))
     total = back.count()
     # urls alone collide by construction (path suffix is row_id mod
     # 99971); (url, warc_ts) is unique per generated row
     distinct = back.select("url", "warc_ts").distinct().count()
-    ok = (counters["accepted"] == ROWS and total == ROWS and distinct == ROWS)
+    ok = (0 < len(done) < GROUPS and counters["accepted"] == ROWS
+          and total == ROWS and distinct == ROWS)
     print(json.dumps({
         "rows": ROWS, "accepted": counters["accepted"],
         "rows_written": total, "distinct_urls": distinct,

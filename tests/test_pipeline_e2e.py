@@ -208,3 +208,14 @@ def test_checkpoint_survives_empty_groups(spark, pages_df, tmp_path):
         with open(os.path.join(ledger, name)) as f:
             groups.append(json.load(f)["accepted"])
     assert len(groups) == 8 and groups.count(0) >= 6
+
+
+@pytest.mark.parametrize("kw", [{"n_buckets": 0}, {"n_groups": 0}])
+def test_checkpoint_rejects_zero_buckets_or_groups(spark, pages_df, tmp_path, kw):
+    """Zero buckets or groups is a usage error, raised before any Spark
+    job or output: zero groups used to commit nothing and report zero
+    counters, zero buckets died in a task with REMAINDER_BY_ZERO."""
+    out = str(tmp_path / "ckpt")
+    with pytest.raises(ValueError, match="must be >= 1"):
+        run_pipeline_checkpointed(spark, pages_df, out, **kw)
+    assert not os.path.exists(out)
