@@ -19,7 +19,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 PAGES_N = int(os.environ.get("SPARK_GRAFT_PAGES_N", "1000000"))
 CACHE = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cache")
 

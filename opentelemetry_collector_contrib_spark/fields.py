@@ -57,18 +57,23 @@ def with_field(df: DataFrame, path: str, value: Column) -> DataFrame:
     )
 
 
-def merge_map_into(df: DataFrame, root: str, new_map: Column) -> DataFrame:
-    """Merge a MAP<STRING,STRING> column into ``root`` (upsert per key).
+def merged_map(columns: list[str], root: str, new_map: Column) -> Column:
+    """``root`` with a MAP<STRING,STRING> merged in (upsert per key), for
+    a frame with ``columns``.
 
     NULL new maps leave the target untouched (parse-failure rows keep
     their original fields — on_error=send semantics,
     pkg/stanza/operator/helper/transformer.go:148-151).
     """
     base = F.coalesce(F.col(root), F.create_map().cast("map<string,string>")) \
-        if root in df.columns else F.create_map().cast("map<string,string>")
-    merged = F.when(new_map.isNull(), F.col(root) if root in df.columns else base) \
+        if root in columns else F.create_map().cast("map<string,string>")
+    return F.when(new_map.isNull(), F.col(root) if root in columns else base) \
         .otherwise(F.map_concat(base, new_map))
-    return df.withColumn(root, merged)
+
+
+def merge_map_into(df: DataFrame, root: str, new_map: Column) -> DataFrame:
+    """Merge a MAP<STRING,STRING> column into ``root`` (see ``merged_map``)."""
+    return df.withColumn(root, merged_map(df.columns, root, new_map))
 
 
 def drop_field(df: DataFrame, path: str) -> DataFrame:

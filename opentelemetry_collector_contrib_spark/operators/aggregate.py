@@ -13,6 +13,8 @@ count/sum.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -43,57 +45,75 @@ class MetricDef:
     source_attribute: str | None = None              # sum connector only
 
 
-def _cond(expr) -> Column:
-    return F.expr(expr) if isinstance(expr, str) else expr
-
-
-def _select_rows(df: DataFrame, mdef: MetricDef) -> tuple[DataFrame, list[str]]:
-    """Apply conditions + attribute presence/default rules; return the
-    filtered frame with grouping columns materialized."""
-    if mdef.conditions:
-        keep = F.lit(False)
-        for c in mdef.conditions:
-            keep = keep | F.coalesce(_cond(c), F.lit(False))
-        df = df.filter(keep)
-    group_cols: list[str] = []
-    for spec in mdef.attributes:
-        v = field_col(spec.key)
-        if spec.default_value is not None:
-            v = F.coalesce(v, F.lit(spec.default_value))
+def metric_pass(counts: list[MetricDef], sums: list[MetricDef],
+                resource_keys: list[str] | None = None,
+                reference_quirks: bool = False) -> Callable[[DataFrame], DataFrame]:
+    """Compile count and sum defs into ONE pass, its Columns built once:
+    each row emits a ``(metric_name, resource..., attrs..., value)``
+    struct per def whose conditions and presence rule hold, and one
+    groupBy over the inlined structs aggregates every def (one scan, one
+    shuffle). Output: (resource..., first def's attrs..., value,
+    metric_name, other defs' attrs...), NULL where a def lacks an attr;
+    ``value`` is a long when every def counts, else a double. Names are
+    unique, as in the reference's configs (metrics are map keys): they
+    tell the defs' rows apart in the shared groupBy.
+    """
+    defs = [*counts, *sums]
+    if len({m.name for m in defs}) != len(defs):
+        raise ValueError(f"metric names must be unique: {[m.name for m in defs]}")
+    dims = list(dict.fromkeys(a.col_name for m in defs for a in m.attributes))
+    rkeys = list(resource_keys or [])
+    rows = []
+    for i, mdef in enumerate(defs):
+        conds = [F.expr(c) if isinstance(c, str) else c for c in mdef.conditions]
+        keep = [reduce(Column.__or__, [F.coalesce(c, F.lit(False)) for c in conds])
+                ] if conds else []
+        attrs = {}
+        for spec in mdef.attributes:
+            v = field_col(spec.key)
+            if spec.default_value is not None:
+                v = F.coalesce(v, F.lit(spec.default_value))
+            else:
+                keep.append(v.isNotNull())  # counter.go:95-104 presence rule
+            attrs[spec.col_name] = v
+        if i < len(counts):
+            value = F.lit(1).cast("long")
+        elif not mdef.source_attribute:
+            raise ValueError("sum connector requires source_attribute")
         else:
-            df = df.filter(v.isNotNull())  # counter.go:95-104 presence rule
-        df = df.withColumn(spec.col_name, v)
-        group_cols.append(spec.col_name)
-    return df, group_cols
+            # try_cast: non-numeric strings are skipped, not errors (the
+            # reference parses string values tolerantly, sum.go:40-150)
+            value = field_col(mdef.source_attribute).try_cast("double")
+            if reference_quirks:
+                value = F.coalesce(value, F.lit(0.0)) * F.lit(max(len(mdef.attributes), 1))
+            else:
+                keep.append(value.isNotNull())
+        row = F.struct(F.lit(mdef.name).alias("metric_name"),
+                       *[F.col(f"`{r}`").alias(r) for r in rkeys],
+                       *[attrs.get(d, F.lit(None)).alias(d) for d in dims],
+                       value.alias("value"))
+        rows.append(F.when(reduce(Column.__and__, keep), row) if keep else row)
+    first = [a.col_name for a in defs[0].attributes]
+    emit, named = F.inline(F.array(*rows)), F.col("metric_name").isNotNull()
+    keys = [F.col(f"`{k}`") for k in ["metric_name", *rkeys, *dims]]
+    value = (F.sum("value") if sums else F.count(F.lit(1))).alias("value")
+    out = [F.col(f"`{k}`") for k in
+           [*rkeys, *first, "value", "metric_name", *[d for d in dims if d not in first]]]
+    return lambda df: df.select(emit).filter(named).groupBy(*keys).agg(value).select(*out)
 
 
 def count_metrics(df: DataFrame, metrics: list[MetricDef],
                   resource_keys: list[str] | None = None) -> DataFrame:
-    """count connector: one aggregate frame per metric def, unioned.
-
-    Output schema: (metric_name, resource..., attrs..., value).
-    Missing group columns across defs are NULL-padded via unionByName.
-    """
-    outs = []
-    for mdef in metrics:
-        sel, group_cols = _select_rows(df, mdef)
-        rcols = list(resource_keys or [])
-        gcols = [F.col(f"`{c}`") for c in [*rcols, *group_cols]]  # dotted names
-        agg = (sel.groupBy(*gcols)
-               .agg(F.count(F.lit(1)).alias("value"))
-               .withColumn("metric_name", F.lit(mdef.name)))
-        outs.append(agg)
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o, allowMissingColumns=True)
-    return result
+    """count connector: every metric def in one pass (``metric_pass``)."""
+    return metric_pass(metrics, [], resource_keys)(df)
 
 
 def sum_metrics(df: DataFrame, metrics: list[MetricDef],
                 resource_keys: list[str] | None = None,
                 reference_quirks: bool = False) -> DataFrame:
     """sum connector: numeric-string source_attribute parsed to double
-    and summed (connector/sumconnector/config.go:32-34).
+    and summed (connector/sumconnector/config.go:32-34), every def in
+    one pass (``metric_pass``).
 
     ``reference_quirks=True`` reproduces two behaviors the reference's
     goldens encode (verified in tests/test_golden_sumconnector.py):
@@ -105,28 +125,7 @@ def sum_metrics(df: DataFrame, metrics: list[MetricDef],
     semantics (each row adds its value exactly once; non-numeric
     skipped).
     """
-    outs = []
-    for mdef in metrics:
-        if not mdef.source_attribute:
-            raise ValueError("sum connector requires source_attribute")
-        sel, group_cols = _select_rows(df, mdef)
-        # try_cast: non-numeric strings are skipped, not errors (the
-        # reference parses string values tolerantly, sum.go:40-150)
-        src = field_col(mdef.source_attribute).try_cast("double")
-        if reference_quirks:
-            src = F.coalesce(src, F.lit(0.0)) * F.lit(max(len(mdef.attributes), 1))
-        else:
-            sel = sel.filter(src.isNotNull())
-        rcols = list(resource_keys or [])
-        gcols = [F.col(f"`{c}`") for c in [*rcols, *group_cols]]  # dotted names
-        agg = (sel.groupBy(*gcols)
-               .agg(F.sum(src).alias("value"))
-               .withColumn("metric_name", F.lit(mdef.name)))
-        outs.append(agg)
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o, allowMissingColumns=True)
-    return result
+    return metric_pass([], metrics, resource_keys, reference_quirks)(df)
 
 
 def histogram_metrics(df: DataFrame, value: str | Column, buckets: list[float],

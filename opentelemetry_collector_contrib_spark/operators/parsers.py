@@ -19,9 +19,18 @@ import re as _re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from opentelemetry_collector_contrib_spark.fields import field_col, merge_map_into
+from opentelemetry_collector_contrib_spark.fields import (
+    field_col,
+    merge_map_into,
+    merged_map,
+)
 from opentelemetry_collector_contrib_spark.model import SEVERITY_TEXT_TO_NUM
-from opentelemetry_collector_contrib_spark.operators.base import Operator, apply_on_error
+from opentelemetry_collector_contrib_spark.operators.base import (
+    Operator,
+    apply_on_error,
+    on_error_steps,
+    step_operator,
+)
 
 
 def _strip_named_groups(pattern: str) -> str:
@@ -295,6 +304,10 @@ def compile_grok(pattern: str, definitions: dict[str, str] | None = None,
     return expand(pattern, 0), groups, types
 
 
+_GROK_TYPES = {"int": "long", "long": "long", "float": "double",
+               "double": "double", "string": "string", "boolean": "boolean"}
+
+
 def grok_parser(
     pattern: str,
     parse_from: str = "body",
@@ -313,11 +326,10 @@ def grok_parser(
     regex, groups, types = compile_grok(pattern, definitions)
     n_groups = max(groups.values(), default=0)
 
-    def fn(df: DataFrame) -> DataFrame:
+    def steps(columns: list[str]) -> list:
         src = field_col(parse_from)
         # ONE regex pass total (see regex_parser: the split size IS the
         # match test for multi-group patterns)
-        df = df.withColumn("_cap", _single_pass_captures(src, regex, n_groups))
         cap = F.col("_cap")
         if n_groups > 1:
             matched = F.size(cap) == n_groups
@@ -329,18 +341,21 @@ def grok_parser(
                 F.array(*[F.lit(k) for k in groups]),
                 F.array(*[F.element_at(cap, i) for i in groups.values()]),
             ))
-        df = merge_map_into(df, parse_to, captures)
-        for key, typ in types.items():
-            spark_t = {"int": "long", "long": "long", "float": "double",
-                       "double": "double", "string": "string",
-                       "boolean": "boolean"}[typ]
-            df = df.withColumn(
-                key.replace(".", "_"),
-                F.when(matched, F.element_at(cap, groups[key])).try_cast(spark_t))
-        df = _apply_subparsers(df, parse_to, timestamp, severity)
-        return apply_on_error(df, matched, on_error).drop("_cap")
+        typed = {key.replace(".", "_"):
+                 F.when(matched, F.element_at(cap, groups[key]))
+                 .try_cast(_GROK_TYPES[typ]) for key, typ in types.items()}
+        # the sub-parsers read the record after the captures are merged,
+        # typed captures included
+        later = _subparser_steps(timestamp, severity,
+                                 lambda path: typed.get(path, field_col(path)))
+        *mid, last = [{**typed, **(later[0] if later else {})}, *later[1:]]
+        flag, drop = on_error_steps(columns, matched, on_error)
+        return [{"_cap": _single_pass_captures(src, regex, n_groups)},
+                {parse_to: merged_map(columns, parse_to, captures)},
+                *mid, *drop, {**last, **flag, "_cap": None}]
 
-    return Operator("grok_parser", fn, {"pattern": pattern})
+    return step_operator("grok_parser", steps, {"pattern": pattern})
+
 
 
 # ---------------------------------------------------------------------------
@@ -456,19 +471,24 @@ def keyvalue_parser(
     pair_delimiter: str = " ",
     on_error: str = "send",
 ) -> Operator:
-    """``k=v`` pairs -> map, via native str_to_map."""
+    """``k=v`` pairs -> map, via native str_to_map. A doubled, leading or
+    trailing pair delimiter is not a pair."""
 
-    def fn(df: DataFrame) -> DataFrame:
+    def steps(columns: list[str]) -> list:
         src = field_col(parse_from)
         # str_to_map delimiters are regexes: escape the literal config
-        parsed = F.str_to_map(src, F.lit(_re.escape(pair_delimiter)),
-                              F.lit(_re.escape(delimiter)))
+        parsed = F.map_filter(
+            F.str_to_map(src, F.lit(_re.escape(pair_delimiter)),
+                         F.lit(_re.escape(delimiter))),
+            # an empty pair maps "" to null
+            lambda k, v: (k != F.lit("")) | v.isNotNull())
         # success requires at least one delimiter in the input
         ok = src.contains(delimiter)
-        df = merge_map_into(df, parse_to, F.when(ok, parsed))
-        return apply_on_error(df, ok, on_error)
+        flag, drop = on_error_steps(columns, ok, on_error)
+        return [*drop, {parse_to: merged_map(columns, parse_to, F.when(ok, parsed)),
+                        **flag}]
 
-    return Operator("keyvalue_parser", fn, {})
+    return step_operator("keyvalue_parser", steps, {})
 
 
 # ---------------------------------------------------------------------------
@@ -639,19 +659,24 @@ def severity_map_expr(col: Column, mapping: dict[str, list] | None = None) -> Co
     return expr.otherwise(F.lit(0))
 
 
+def _severity_steps(src: Column, mapping: dict[str, list] | None) -> list[dict]:
+    from opentelemetry_collector_contrib_spark.model import SEVERITY_NUM_TO_TEXT
+
+    text_expr: Column = F.lit("")
+    for n, t in SEVERITY_NUM_TO_TEXT.items():
+        text_expr = F.when(F.col("severity_number").between(n, n + 3), F.lit(t)).otherwise(text_expr)
+    return [{"severity_number": severity_map_expr(src, mapping).cast("int")},
+            {"severity_text": text_expr}]
+
+
 def severity_parser(
     parse_from: str,
     mapping: dict[str, list] | None = None,
 ) -> Operator:
-    from opentelemetry_collector_contrib_spark.model import SEVERITY_NUM_TO_TEXT
-
     def fn(df: DataFrame) -> DataFrame:
-        num = severity_map_expr(field_col(parse_from), mapping)
-        df = df.withColumn("severity_number", num.cast("int"))
-        text_expr: Column = F.lit("")
-        for n, t in SEVERITY_NUM_TO_TEXT.items():
-            text_expr = F.when(F.col("severity_number").between(n, n + 3), F.lit(t)).otherwise(text_expr)
-        return df.withColumn("severity_text", text_expr)
+        for step in _severity_steps(field_col(parse_from), mapping):
+            df = df.withColumns(step)
+        return df
 
     return Operator("severity_parser", fn, {})
 
@@ -812,17 +837,26 @@ def syslog_parser(
 # any parser config)
 # ---------------------------------------------------------------------------
 
-def _apply_subparsers(df: DataFrame, parse_to: str,
-                      timestamp: dict | None, severity: dict | None) -> DataFrame:
+def _subparser_steps(timestamp: dict | None, severity: dict | None,
+                     read=field_col) -> list[dict]:
+    """The sub-parsers as at most two dependent steps; ``read`` resolves
+    their ``parse_from`` paths."""
+    first: dict = {}
     if timestamp:
         ts = parse_time_col(
-            field_col(timestamp["parse_from"]),
+            read(timestamp["parse_from"]),
             timestamp["layout"],
             timestamp.get("layout_type", "strptime"),
         )
-        df = df.withColumn("time", ts)
-        df = df.withColumn("time_unix_nano", F.unix_micros(ts) * F.lit(1000))
-    if severity:
-        sev_op = severity_parser(severity["parse_from"], severity.get("mapping"))
-        df = sev_op.apply(df)
+        first = {"time": ts, "time_unix_nano": F.unix_micros(ts) * F.lit(1000)}
+    if not severity:
+        return [first] if first else []
+    num, text = _severity_steps(read(severity["parse_from"]), severity.get("mapping"))
+    return [{**first, **num}, text]
+
+
+def _apply_subparsers(df: DataFrame, parse_to: str,
+                      timestamp: dict | None, severity: dict | None) -> DataFrame:
+    for step in _subparser_steps(timestamp, severity):
+        df = df.withColumns(step)
     return df

@@ -20,7 +20,14 @@ SURVEY.md §3.3) over the Common-Crawl-style ``pages`` table
 plan: broadcast joins only, no shuffle. ``write_unit`` writes it
 straight to per-sink partitions (no exchange: each scan task writes its
 own rows), then reads the written columns back for the aggregates and
-derives the counters from them; only the small aggregate shuffles.
+derives the counters from them; only the small aggregate shuffles, in
+one pass over every metric def.
+
+The plan is compiled once per session and applied per unit: the first
+unit builds the Columns of each stage (parse, route, sink rows,
+aggregate) and every later unit over frames with the same columns, in
+the same live SparkContext, only hands them to Spark, one projection
+per dependent stage. Nothing is compiled at import.
 
 Every pages run shares this body: ``run_pipeline`` (one batch pass),
 ``plans/checkpoint.py::run_pipeline_checkpointed`` (one ``write_unit``
@@ -33,6 +40,8 @@ from __future__ import annotations
 
 import json
 import os
+import weakref
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -40,16 +49,14 @@ from pyspark.sql import functions as F
 from opentelemetry_collector_contrib_spark.operators.aggregate import (
     AttrSpec,
     MetricDef,
-    count_metrics,
-    sum_metrics,
+    metric_pass,
 )
 from opentelemetry_collector_contrib_spark.operators.base import (
     PARSE_ERROR_COL,
-    compile_pipeline,
+    compile_steps,
 )
 from opentelemetry_collector_contrib_spark.operators.parsers import (
     grok_parser,
-    json_parser,
     keyvalue_parser,
 )
 from opentelemetry_collector_contrib_spark.operators.routing import (
@@ -79,46 +86,71 @@ DEFAULT_SINK = "sink_default"
 PAGES_SINKS = [r.sink for r in PAGES_ROUTES] + [DEFAULT_SINK]
 
 
+# Compiled stages per live SparkContext, keyed by stage and input
+# column names: Columns are JVM objects of one context, and the steps
+# branch on the input columns (merged maps, the error flag).
+_COMPILED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _compiled(df: DataFrame, stage: str,
+              compile_for: Callable[[list[str]], Callable[[DataFrame], DataFrame]]
+              ) -> DataFrame:
+    """Apply ``stage`` to ``df``, compiling it for ``df``'s columns on
+    first use."""
+    per_context = _COMPILED.setdefault(df.sparkSession.sparkContext, {})
+    columns = df.columns
+    key = (stage, tuple(columns))
+    if key not in per_context:
+        per_context[key] = compile_for(columns)
+    return per_context[key](df)
+
+
+def _steps(build: Callable[[], list]):
+    return lambda columns: compile_steps(columns, build())
+
+
+def _parse_steps(on_error: str) -> list:
+    attrs, rest = F.col("attributes"), F.col("attributes").getItem("rest")
+    return [
+        {"body": F.col("text")},
+        grok_parser(
+            PAGES_GROK,
+            on_error=on_error,
+            timestamp={"parse_from": "attributes.ts",
+                       "layout": "%d/%b/%Y:%H:%M:%S %z"},
+        ).steps,
+        # promote hot keys to typed top-level columns; downstream
+        # consumers (routes, aggregates) then reference plain attributes
+        # instead of re-expanding the map expression.
+        # rest = "k=v k=v ... {json}": split the kv region from the JSON
+        # fragment BEFORE parsing so the kv map gets no junk keys. The
+        # JSON struct is bound to a column so each row's fragment is
+        # parsed once.
+        {"method": attrs.getItem("method"), "path": attrs.getItem("path"),
+         "rest": rest,
+         "_kv_str": F.regexp_extract(rest, r"^([^{]*)", 1),
+         "_json": F.from_json(F.regexp_extract(rest, r"(\{.*\})", 1),
+                              "struct<svc:string, dur_ms:double>")},
+        keyvalue_parser(parse_from="_kv_str", parse_to="attributes",
+                        on_error="send_quiet").steps,
+        {"svc": F.col("_json").getField("svc"),
+         "dur_ms": F.col("_json").getField("dur_ms"),
+         "host": F.parse_url(F.col("url"), F.lit("HOST")),
+         "_kv_str": None, "_json": None,
+         # the raw tail is fully decomposed above — carrying it to every
+         # sink would re-ship the bytes; drop it from the map
+         "attributes": F.map_filter(attrs, lambda k, _v: k != F.lit("rest")),
+         # severity from HTTP status class (severity_parser range semantics)
+         "severity_number": F.when(F.col("status") >= 500, F.lit(17))     # error
+                             .when(F.col("status") >= 400, F.lit(13))     # warn
+                             .when(F.col("status").isNotNull(), F.lit(9)) # info
+                             .otherwise(F.lit(0)).cast("int")},
+    ]
+
+
 def parse_pages(df: DataFrame, on_error: str = "send") -> DataFrame:
     """pages -> flat log records. Pure narrow ops (no shuffle)."""
-    df = df.withColumn("body", F.col("text"))
-    df = grok_parser(
-        PAGES_GROK,
-        on_error=on_error,
-        timestamp={"parse_from": "attributes.ts",
-                   "layout": "%d/%b/%Y:%H:%M:%S %z"},
-    ).apply(df)
-    # promote hot keys to typed top-level columns; downstream consumers
-    # (routes, aggregates) then reference plain attributes instead of
-    # re-expanding the map expression
-    df = (df.withColumn("method", F.col("attributes").getItem("method"))
-            .withColumn("path", F.col("attributes").getItem("path"))
-            .withColumn("rest", F.col("attributes").getItem("rest")))
-    # rest = "k=v k=v ... {json}": split the kv region from the JSON
-    # fragment BEFORE parsing so the kv map gets no junk keys
-    df = df.withColumn("_kv_str", F.regexp_extract(F.col("rest"), r"^([^{]*)", 1))
-    df = keyvalue_parser(parse_from="_kv_str", parse_to="attributes",
-                         on_error="send_quiet").apply(df)
-    json_frag = F.regexp_extract(F.col("rest"), r"(\{.*\})", 1)
-    parsed = F.from_json(json_frag, "struct<svc:string, dur_ms:double>")
-    df = (df.withColumn("svc", parsed.getField("svc"))
-            .withColumn("dur_ms", parsed.getField("dur_ms"))
-            .withColumn("host", F.parse_url(F.col("url"), F.lit("HOST")))
-            .drop("_kv_str"))
-    # the raw tail is fully decomposed above — carrying it to every sink
-    # would re-ship the bytes; drop it from the map
-    df = df.withColumn(
-        "attributes",
-        F.map_filter(F.col("attributes"), lambda k, _v: k != F.lit("rest")))
-    # severity from HTTP status class (severity_parser range semantics)
-    df = df.withColumn(
-        "severity_number",
-        F.when(F.col("status") >= 500, F.lit(17))     # error
-         .when(F.col("status") >= 400, F.lit(13))     # warn
-         .when(F.col("status").isNotNull(), F.lit(9)) # info
-         .otherwise(F.lit(0)).cast("int"),
-    )
-    return df
+    return _compiled(df, f"parse:{on_error}", _steps(lambda: _parse_steps(on_error)))
 
 
 def enrich_pages(df: DataFrame, host_meta: DataFrame | None = None,
@@ -132,7 +164,8 @@ def enrich_pages(df: DataFrame, host_meta: DataFrame | None = None,
 
 
 def route_pages(df: DataFrame) -> DataFrame:
-    return df.withColumn("sink", route_tag_expr(PAGES_ROUTES, DEFAULT_SINK))
+    return _compiled(df, "route", _steps(lambda: [
+        {"sink": route_tag_expr(PAGES_ROUTES, DEFAULT_SINK)}]))
 
 
 # Per-sink aggregates (count connector shape, F3): record counts by
@@ -152,9 +185,8 @@ PAGES_SUM_METRICS = [
 
 
 def aggregate_pages(routed: DataFrame) -> DataFrame:
-    counts = count_metrics(routed, PAGES_COUNT_METRICS)
-    sums = sum_metrics(routed, PAGES_SUM_METRICS)
-    return counts.unionByName(sums, allowMissingColumns=True)
+    return _compiled(routed, "aggregate", lambda _columns: metric_pass(
+        PAGES_COUNT_METRICS, PAGES_SUM_METRICS))
 
 
 def sink_rows(routed: DataFrame) -> DataFrame:
@@ -168,8 +200,9 @@ def sink_rows(routed: DataFrame) -> DataFrame:
     attributes map to an entries array (parquet-friendly, stable order
     for row-equality checks).
     """
-    return routed.drop("html", "body", "rest").withColumn(
-        "attributes", F.map_entries(F.col("attributes")))
+    return _compiled(routed, "sink_rows", _steps(lambda: [
+        {"html": None, "body": None, "rest": None,
+         "attributes": F.map_entries(F.col("attributes"))}]))
 
 
 def routed_pages(pages: DataFrame, host_meta: DataFrame | None = None,
@@ -203,8 +236,8 @@ def write_unit(spark: SparkSession, routed: DataFrame, routed_dir: str,
     # Drop mode (refused rows removed before the sinks) keeps the
     # pre-drop observe.
     drop_refused = on_error.startswith("drop")
+    obs = Observation("obsreport")
     if drop_refused:
-        obs = Observation("obsreport")
         sent = [F.sum(((F.col("sink") == s) & ~F.col(PARSE_ERROR_COL)).cast("long"))
                 .alias(f"sent_{s}") for s in PAGES_SINKS]
         routed = routed.observe(
@@ -225,19 +258,21 @@ def write_unit(spark: SparkSession, routed: DataFrame, routed_dir: str,
     # frame touches ~dozens of rows.  The known schema skips inference,
     # which would fail on a unit that wrote no rows.
     back = spark.read.schema(writable.schema).parquet(routed_dir)
-    agg_obs = Observation("obsreport_aggs")
-    name, val = F.col("metric_name"), F.col("value")
-    rec = F.when(name == "log.record.count", val)
-    ref = F.when(name == "log.refused.count", val)
-    aggregate_pages(back).observe(
-        agg_obs,
-        F.sum(F.coalesce(rec, ref)).alias("accepted"),
-        F.sum(ref).alias("refused"),
-        *[F.sum(F.when(F.col("sink") == s, F.coalesce(rec, ref)))
-          .alias(f"sent_{s}") for s in PAGES_SINKS],
-    ).write.mode("overwrite").parquet(metrics_dir)
+    metrics = aggregate_pages(back)
+    if not drop_refused:
+        name, val = F.col("metric_name"), F.col("value")
+        rec = F.when(name == "log.record.count", val)
+        ref = F.when(name == "log.refused.count", val)
+        metrics = metrics.observe(
+            obs,
+            F.sum(F.coalesce(rec, ref)).alias("accepted"),
+            F.sum(ref).alias("refused"),
+            *[F.sum(F.when(F.col("sink") == s, F.coalesce(rec, ref)))
+              .alias(f"sent_{s}") for s in PAGES_SINKS],
+        )
+    metrics.write.mode("overwrite").parquet(metrics_dir)
 
-    got = (obs if drop_refused else agg_obs).get
+    got = obs.get
     return {
         "accepted": int(got["accepted"] or 0),
         "refused": int(got["refused"] or 0),

@@ -162,6 +162,15 @@ def test_keyvalue_parser_custom_delims(spark):
     assert out["attributes"] == {"a": "1", "b": "2"}
 
 
+@pytest.mark.parametrize("body", ["a=1 b=2 ", "a=1  b=2", " a=1 b=2"])
+def test_keyvalue_parser_skips_empty_pairs(spark, body):
+    """A doubled, leading or trailing pair delimiter is not a pair: no
+    '' -> null entry in the map."""
+    out = keyvalue_parser().apply(_body_df(spark, [body])).first()
+    assert out["attributes"] == {"a": "1", "b": "2"}
+    assert out["_parse_error"] is False
+
+
 def test_uri_parser(spark):
     df = _body_df(spark, ["https://example.com:8080/p/q?x=1&y=2"])
     out = uri_parser().apply(df).first()["attributes"]

@@ -13,8 +13,10 @@ from pyspark.sql import functions as F
 from opentelemetry_collector_contrib_spark.datagen import (
     gen_host_meta,
     gen_lang_family,
+    gen_pages_pdf,
 )
 from opentelemetry_collector_contrib_spark.plans.pipeline import (
+    PAGES_SINKS,
     parse_pages,
     route_pages,
     enrich_pages,
@@ -219,3 +221,58 @@ def test_checkpoint_rejects_zero_buckets_or_groups(spark, pages_df, tmp_path, kw
     with pytest.raises(ValueError, match="must be >= 1"):
         run_pipeline_checkpointed(spark, pages_df, out, **kw)
     assert not os.path.exists(out)
+
+
+def _expected_counters(pdf: pd.DataFrame) -> dict:
+    golden = golden_routing(pdf)
+    sent = golden.sink.value_counts().to_dict()
+    return {"accepted": len(golden), "refused": int(golden.parse_error.sum()),
+            "sent": {s: sent.get(s, 0) for s in PAGES_SINKS}}
+
+
+def test_plan_compiled_once_per_session(spark, tmp_path, monkeypatch):
+    """Units over frames of one shape reuse one compiled plan: two runs
+    over two different page tables give their own correct counters, and
+    the grok pattern is compiled once."""
+    from opentelemetry_collector_contrib_spark.operators import parsers
+    compiled = []
+    real = parsers.compile_grok
+    monkeypatch.setattr(parsers, "compile_grok",
+                        lambda *a, **kw: compiled.append(a) or real(*a, **kw))
+    for seed in (11, 12):
+        pdf = gen_pages_pdf(300, seed=seed)
+        # a column no other test's pages carry: the first run compiles
+        pages = spark.createDataFrame(pdf).withColumn("compile_probe", F.lit(seed))
+        counters = run_pipeline(spark, pages, str(tmp_path / f"out{seed}"))
+        assert counters == _expected_counters(pdf)
+    assert len(compiled) == 1
+
+
+RESTART_SCRIPT = """
+import json, sys
+from opentelemetry_collector_contrib_spark.datagen import write_pages
+from opentelemetry_collector_contrib_spark.plans.pipeline import run_pipeline
+from opentelemetry_collector_contrib_spark.session import get_spark
+out = sys.argv[1]
+write_pages(out + "/pages", 300, partitions=2)
+got = []
+for n in (2, 1):
+    spark = get_spark(f"local[{n}]", shuffle_partitions=2)
+    got.append(run_pipeline(spark, spark.read.parquet(out + "/pages"), f"{out}/out{n}"))
+    spark.stop()
+print(json.dumps(got))
+"""
+
+
+def test_plan_survives_context_restart(tmp_path):
+    """Run, stop the context, open ``local[1]`` in the same process and
+    run again (perfbench's scaling pass does this): the plan compiled
+    under the first context is not reused, and the counters agree."""
+    import subprocess
+    import sys
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run([sys.executable, "-c", RESTART_SCRIPT, str(tmp_path)],
+                         cwd=repo, capture_output=True, text=True, timeout=600)
+    assert res.returncode == 0, res.stderr[-2000:]
+    first, second = json.loads(res.stdout.strip().splitlines()[-1])
+    assert first == second == _expected_counters(gen_pages_pdf(300))

@@ -97,6 +97,23 @@ def test_aggregate_has_partial_agg(spark, pages_parquet):
     assert plan.count("Exchange") <= 2      # one shuffle (+AQE read)
 
 
+def test_aggregate_readback_one_scan_one_shuffle(spark, pages_parquet, tmp_path):
+    """The flagship's aggregate read-back (``aggregate_pages`` over the
+    written routed parquet, as ``write_unit`` plans it) compiles every
+    count and sum def into one pass: exactly one FileScan and one
+    shuffle Exchange, not one of each per metric def."""
+    from opentelemetry_collector_contrib_spark.plans.pipeline import (
+        aggregate_pages, sink_rows)
+    routed_dir = str(tmp_path / "routed")
+    writable = sink_rows(route_pages(parse_pages(spark.read.parquet(pages_parquet))))
+    writable.write.partitionBy("sink").parquet(routed_dir)
+    back = spark.read.schema(writable.schema).parquet(routed_dir)
+    plan = aggregate_pages(back)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("Exchange") == 1, plan
+
+
 def test_minhash_single_shuffle_per_join_side(spark):
     """LSH pairs: signature computation is narrow (explode happens
     before the only exchanges: one per join side on (band, bucket) +
