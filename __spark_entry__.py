@@ -1745,8 +1745,7 @@ def q_logs_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     a stanza operator pipeline declared as config dicts — the
     reference's testdata regex_parser (+embedded timestamp/severity)
     followed by add/filter/router — compiled to ONE fused plan."""
-    from opentelemetry_collector_contrib_spark.operators.logstransform import (
-        logs_transform)
+    from opentelemetry_collector_contrib_spark.plans.config import compile_config
     orders = _t(spark, sf_dir, "orders")
     logs = orders.select(
         "o_orderkey",
@@ -1757,7 +1756,7 @@ def q_logs_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .otherwise(F.lit("INFO")),
                  F.lit(" order placed "),
                  F.col("o_orderkey").cast("string")).alias("body"))
-    proc = logs_transform([
+    proc = compile_config([
         {"type": "regex_parser",
          "regex": (r"^(?P<time>\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}) "
                    r"(?P<sev>[A-Z]*) (?P<msg>.*)$"),

@@ -22,7 +22,6 @@ from typing import Callable
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType([
@@ -100,30 +99,6 @@ def extract_features(df: DataFrame,
             yield pd.DataFrame(out)
 
     return df.select("media_id", "kind", "content").mapInPandas(gen, FEATURE_SCHEMA)
-
-
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: passes metadata through, marks target size.
-    Real pixel work would happen inside the same mapInPandas shape as
-    extract_features."""
-    return df.withColumn(
-        "meta",
-        F.map_concat(
-            F.coalesce(F.col("meta"), F.create_map().cast("map<string,string>")),
-            F.create_map(F.lit("resize_target"), F.lit(f"{width}x{height}")),
-        ),
-    )
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plan: expands per-video rows into frame
-    descriptors (frame_idx) without decoding — the decode itself is
-    the stubbed step."""
-    meta_frames = F.coalesce(
-        F.element_at(F.col("meta"), "n_frames").cast("int"), F.lit(1))
-    return (df.filter(F.col("kind") == "video")
-            .withColumn("frame_idx", F.explode(
-                F.sequence(F.lit(0), meta_frames - 1, F.lit(every_n)))))
 
 
 def gen_fake_media_pdf(n: int, seed: int = 42) -> pd.DataFrame:

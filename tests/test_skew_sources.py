@@ -56,17 +56,3 @@ def test_read_text_lines(spark, tmp_path):
     assert sorted(r["body"] for r in rows) == ["line one", "line two"]
     assert all(r["observed_time"] is not None for r in rows)
     assert all(r["attributes"] == {} for r in rows)
-
-
-def test_iceberg_gated_fallback(spark, tmp_path):
-    from opentelemetry_collector_contrib_spark.sources.iceberg import (
-        iceberg_available, read_table, write_routed)
-    import pytest as _pytest
-    assert iceberg_available(spark) is False  # no jar in this sandbox
-    df = spark.createDataFrame([(1, "a", "https://x/1")], "v int, sink string, url string")
-    with _pytest.raises(RuntimeError, match="no Iceberg catalog"):
-        write_routed(df, "cat.db.t")
-    # parquet fallback path through the same reader entrypoint
-    p = str(tmp_path / "t")
-    df.write.parquet(p)
-    assert read_table(spark, p).count() == 1
