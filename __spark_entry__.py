@@ -320,9 +320,12 @@ def q_metrics_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_service_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """servicegraph connector: client<->server span correlation
     (connector/servicegraphconnector/connector.go:64-394), synthesized
-    span table derived deterministically from orders/lineitem."""
+    span table derived deterministically from orders/lineitem: odd
+    lines are client spans (kind 3), even lines server spans (kind 2)
+    lasting l_quantity ms, so the server histogram sum in ms is the
+    summed quantity."""
     from opentelemetry_collector_contrib_spark.operators.enrich import (
-        service_graph_edges)
+        service_graph_metrics)
     li = _t(spark, sf_dir, "lineitem")
     spans = li.select(
         F.col("l_orderkey").cast("string").alias("trace_id"),
@@ -330,14 +333,20 @@ def q_service_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("l_linenumber").cast("string")).alias("span_id"),
         F.concat(F.col("l_orderkey").cast("string"), F.lit(":"),
                  (F.col("l_linenumber") - 1).cast("string")).alias("parent_span_id"),
-        F.when(F.col("l_linenumber") % 2 == 1, F.lit("client"))
-        .otherwise(F.lit("server")).alias("kind"),
+        F.when(F.col("l_linenumber") % 2 == 1, F.lit(3))
+        .otherwise(F.lit(2)).alias("kind"),
         F.concat(F.lit("svc-"), (F.col("l_suppkey") % 5).cast("string")).alias("service"),
-        F.col("l_quantity").alias("duration_ms"))
-    out = service_graph_edges(spans)
-    return out.select("client_service", "server_service", "call_count",
-                      F.round(F.col("total_server_duration_ms"), 2)
-                      .alias("total_server_duration_ms"))
+        F.lit(None).cast("int").alias("status_code"),
+        F.lit(0).cast("long").alias("start_ns"),
+        (F.col("l_quantity") * F.lit(1e6)).cast("long").alias("end_ns"),
+        F.create_map().cast("map<string,string>").alias("attributes"))
+    out = service_graph_metrics(spans)
+    return out.select(
+        F.col("attrs")["client"].alias("client_service"),
+        F.col("attrs")["server"].alias("server_service"),
+        F.col("total").alias("call_count"),
+        F.round(F.col("server_hist.sum") * 1000, 2)
+        .alias("total_server_duration_ms"))
 
 
 # ---------------------------------------------------------------------------
@@ -1840,9 +1849,11 @@ def q_exceptions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tail_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """tailsampling processor in batch (any-policy-matches-any-span
-    keeps the whole trace, processor/tailsamplingprocessor/)."""
-    from opentelemetry_collector_contrib_spark.operators.aggregate import tail_sampling
+    """tailsampling processor in batch: one ottl_condition policy
+    whose span conditions match any span keeps the whole trace
+    (processor/tailsamplingprocessor/)."""
+    from opentelemetry_collector_contrib_spark.operators.tailsampling import (
+        tail_sampling_policies)
     li = _t(spark, sf_dir, "lineitem")
     spans = li.select(
         F.col("l_orderkey").alias("trace_id"),
@@ -1850,7 +1861,10 @@ def q_tail_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("l_linenumber").cast("string"),
                  F.lit(":"), F.col("l_partkey").cast("string")).alias("span_id"),
         "l_quantity", "l_returnflag")
-    kept = tail_sampling(spans, ["l_quantity > 49", "l_returnflag = 'R'"])
+    kept = tail_sampling_policies(spans, [
+        {"name": "big-or-returned", "type": "ottl_condition",
+         "ottl_condition": {"span_conditions": [
+             "l_quantity > 49", 'l_returnflag == "R"']}}])
     return kept.select("trace_id", "span_id")
 
 

@@ -465,64 +465,6 @@ def span_metrics_exponential(df: DataFrame, dims: list[str],
                       "bucket_counts")
 
 
-def signal_to_metrics(df: DataFrame, defs: list[dict]) -> DataFrame:
-    """signaltometrics connector (connector/signaltometricsconnector/
-    config/config.go:50-105): generalized metric definitions — each def
-    has a value expression + type (sum | count | histogram) + group
-    attributes + optional conditions.
-
-    def = {"name": str, "type": "sum"|"count"|"histogram",
-           "value": sql-expr (sum/histogram), "attributes": [cols],
-           "conditions": [sql...], "buckets": [floats] (histogram)}
-    """
-    outs = []
-    for d in defs:
-        sel = df
-        if d.get("conditions"):
-            keep = F.lit(False)
-            for c in d["conditions"]:
-                keep = keep | F.coalesce(F.expr(c), F.lit(False))
-            sel = sel.filter(keep)
-        attrs = d.get("attributes", [])
-        if d["type"] == "count":
-            out = (sel.groupBy(*attrs).agg(F.count(F.lit(1)).cast("double").alias("value")))
-        elif d["type"] == "sum":
-            out = (sel.groupBy(*attrs).agg(F.sum(F.expr(d["value"])).alias("value")))
-        elif d["type"] == "histogram":
-            out = histogram_metrics(sel.withColumn("_v", F.expr(d["value"])),
-                                    "_v", d.get("buckets", [1.0, 10.0, 100.0]),
-                                    attrs, metric_name=d["name"]) \
-                .withColumnRenamed("bucket_count", "value") \
-                .withColumn("value", F.col("value").cast("double"))
-            outs.append(out)
-            continue
-        else:
-            raise ValueError(f"unknown metric type {d['type']}")
-        outs.append(out.withColumn("metric_name", F.lit(d["name"])))
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o, allowMissingColumns=True)
-    return result
-
-
-def tail_sampling(spans: DataFrame, policies: list, trace_col: str = "trace_id"):
-    """tailsampling processor in batch
-    (processor/tailsamplingprocessor/processor.go): a trace is kept if
-    ANY policy condition matches ANY span of the trace — trivial in
-    batch because every trace is complete: evaluate per span, aggregate
-    any-match per trace, semi-join back. Two shuffles on trace_id.
-    """
-    keep = F.lit(False)
-    for p in policies:
-        cond = F.expr(p) if isinstance(p, str) else p
-        keep = keep | F.coalesce(cond, F.lit(False))
-    decisions = (spans.groupBy(trace_col)
-                 .agg(F.max(keep.cast("int")).alias("_keep"))
-                 .filter(F.col("_keep") == 1)
-                 .select(trace_col))
-    return spans.join(decisions, on=trace_col, how="left_semi")
-
-
 def grafana_cloud_host_metrics(
     spans: DataFrame,
     host_identifiers: list[str],

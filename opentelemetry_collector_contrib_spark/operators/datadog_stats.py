@@ -114,7 +114,7 @@ def _staged_stats(spans: DataFrame,
                   duration_ns_col: str = "duration_ns") -> DataFrame:
     """Shared eligibility + key projection (see module doc): the
     filtered span frame with the stats key columns plus __top/__err/
-    __dur, ready for the batch or streaming aggregate."""
+    __dur, ready for the stats aggregate."""
     res, attrs = F.col(resource_col), F.col(attrs_col)
     kind = F.col(kind_col)
     parent = F.coalesce(F.col(parent_col).cast("string"), F.lit(""))
@@ -178,54 +178,6 @@ _STATS_KEYS = ["bucket_start_ns", "env", "service", "name", "resource",
                "peer_tags"]
 
 
-def _count_aggs():
-    return [
-        F.count(F.lit(1)).alias("hits"),
-        F.sum(F.when(F.col("__err"), 1).otherwise(0)).alias("errors"),
-        F.sum(F.when(F.col("__top"), 1).otherwise(0))
-        .alias("top_level_hits"),
-        F.sum("__dur").alias("duration_ns"),
-    ]
-
-
-def datadog_apm_stats_stream(spans: DataFrame,
-                             watermark: str = "30 seconds",
-                             **kwargs) -> DataFrame:
-    """Streaming shape of the APM stats connector: the identical
-    eligibility + key derivation as the batch operator, aggregated
-    under an event-time watermark on the bucket timestamp.  Emits the
-    reference's counters (hits/errors/top-level/duration); the batch
-    operator's exact percentiles are a complete-group refinement and
-    stay batch-only.  Same single-shuffle plan, now stateful."""
-    staged = _staged_stats(spans, **kwargs)
-    staged = staged.withColumn(
-        "__bucket_ts",
-        F.timestamp_micros((F.col("bucket_start_ns") / 1000)
-                           .cast("long")))
-    return (staged
-            .withWatermark("__bucket_ts", watermark)
-            .groupBy("__bucket_ts", *_STATS_KEYS)
-            .agg(*_count_aggs())
-            .drop("__bucket_ts"))
-
-
-def _batch_stats_agg(staged: DataFrame) -> DataFrame:
-    keys = _STATS_KEYS
-    return (staged.groupBy(*keys).agg(
-        *_count_aggs(),
-        F.expr("percentile(CASE WHEN NOT __err THEN __dur END, "
-               "array(0.5, 0.95, 0.99))").alias("__okq"),
-        F.expr("percentile(CASE WHEN __err THEN __dur END, "
-               "array(0.5, 0.95, 0.99))").alias("__errq"))
-        .select(*keys, "hits", "errors", "top_level_hits", "duration_ns",
-                F.col("__okq")[0].alias("ok_p50"),
-                F.col("__okq")[1].alias("ok_p95"),
-                F.col("__okq")[2].alias("ok_p99"),
-                F.col("__errq")[0].alias("err_p50"),
-                F.col("__errq")[1].alias("err_p95"),
-                F.col("__errq")[2].alias("err_p99")))
-
-
 def datadog_apm_stats(spans: DataFrame, **kwargs) -> DataFrame:
     """ClientGroupedStats per event-time bucket (see module doc).
 
@@ -234,4 +186,21 @@ def datadog_apm_stats(spans: DataFrame, **kwargs) -> DataFrame:
     top_level_hits, duration_ns, ok_p50/p95/p99, err_p50/p95/p99.
     Accepts the keyword knobs of ``_staged_stats``.
     """
-    return _batch_stats_agg(_staged_stats(spans, **kwargs))
+    return (_staged_stats(spans, **kwargs).groupBy(*_STATS_KEYS).agg(
+        F.count(F.lit(1)).alias("hits"),
+        F.sum(F.when(F.col("__err"), 1).otherwise(0)).alias("errors"),
+        F.sum(F.when(F.col("__top"), 1).otherwise(0))
+        .alias("top_level_hits"),
+        F.sum("__dur").alias("duration_ns"),
+        F.expr("percentile(CASE WHEN NOT __err THEN __dur END, "
+               "array(0.5, 0.95, 0.99))").alias("__okq"),
+        F.expr("percentile(CASE WHEN __err THEN __dur END, "
+               "array(0.5, 0.95, 0.99))").alias("__errq"))
+        .select(*_STATS_KEYS, "hits", "errors", "top_level_hits",
+                "duration_ns",
+                F.col("__okq")[0].alias("ok_p50"),
+                F.col("__okq")[1].alias("ok_p95"),
+                F.col("__okq")[2].alias("ok_p99"),
+                F.col("__errq")[0].alias("err_p50"),
+                F.col("__errq")[1].alias("err_p95"),
+                F.col("__errq")[2].alias("err_p99")))

@@ -130,34 +130,6 @@ def dns_lookup_join(hosts: DataFrame, host_col: str) -> Operator:
     return Operator("dns_lookup_join", fn, {})
 
 
-def service_graph_edges(spans: DataFrame) -> DataFrame:
-    """servicegraph connector (connector/servicegraphconnector/
-    connector.go:64-394): match client span <-> server span on
-    (trace_id, client.span_id == server.parent_span_id) -> edge metrics.
-    Batch shape: one self-join + aggregate."""
-    client = spans.filter(F.col("kind") == "client").select(
-        F.col("trace_id").alias("c_trace_id"),
-        F.col("span_id").alias("c_span_id"),
-        F.col("service").alias("client_service"),
-        F.col("duration_ms").alias("client_duration_ms"),
-    )
-    server = spans.filter(F.col("kind") == "server").select(
-        F.col("trace_id").alias("s_trace_id"),
-        F.col("parent_span_id").alias("s_parent_span_id"),
-        F.col("service").alias("server_service"),
-        F.col("duration_ms").alias("server_duration_ms"),
-    )
-    edges = client.join(
-        server,
-        on=[client["c_trace_id"] == server["s_trace_id"],
-            client["c_span_id"] == server["s_parent_span_id"]],
-        how="inner",
-    )
-    return (edges.groupBy("client_service", "server_service")
-            .agg(F.count(F.lit(1)).alias("call_count"),
-                 F.sum("server_duration_ms").alias("total_server_duration_ms")))
-
-
 SERVICE_GRAPH_DEFAULT_BOUNDS = (
     0.002, 0.004, 0.006, 0.008, 0.01, 0.05, 0.1, 0.2, 0.4, 0.8,
     1, 1.4, 2, 5, 10, 15,

@@ -23,11 +23,6 @@ join). The reference's ``num_traces`` cap is a memory-pressure
 eviction knob with silent data loss (ring_buffer.go) — a batch job has
 no arrival backlog, so it is intentionally not replicated; batch
 output is lossless.
-
-Streaming: the same semantics run through
-streaming/stateful.py::decision_wait grouping (applyInPandasWithState
-keyed on the trace id with an event-time timeout), as used by the
-tailsampling stream path.
 """
 
 from __future__ import annotations

@@ -14,11 +14,11 @@ expressions (the same DSL the transform processor uses), records
 filter + project, then ONE groupBy on (projected resource, datapoint
 attributes) — histograms add a per-bucket partial aggregation first.
 All definitions union into one long-form frame; nothing leaves the
-JVM except nothing.
+JVM.
 
-``aggregate.signal_to_metrics`` remains the lightweight SQL-expression
-variant; this module is the config-faithful surface the reference's
-own testdata goldens run against (tests/test_golden_signaltometrics).
+This is the engine's one signaltometrics implementation: the
+``signaltometrics_config`` DuckDB oracle and the reference's testdata
+goldens (tests/test_golden_signaltometrics) both run against it.
 """
 
 from __future__ import annotations
@@ -134,6 +134,10 @@ def signal_to_metrics_config(df: DataFrame, defs: list[dict],
     gives gauge its last-wins order (required if any def is a gauge).
     Returns the unified long-form frame (OUT_SCHEMA).
     """
+    if not defs:
+        # config.go Validate(): at least one definition is required
+        raise ValueError("signaltometrics: the metric definition list "
+                         "is empty; configure at least one definition")
     outs = []
     for d in defs:
         base = [F.lit(d["name"]).alias("name"),

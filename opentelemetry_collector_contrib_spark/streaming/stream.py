@@ -1,18 +1,12 @@
-"""Structured Streaming variants of the pipeline stages.
+"""The flagship pipeline as a Structured Streaming drain.
 
-The reference is a push-stream DAG (SURVEY §1.2); the batch engine
-covers the north_rule, and this module provides the streaming shapes
-for the operators whose semantics are interval/flush-driven:
-
-- tumbling-window count/sum connector aggregates with a watermark
-  (late-data rule replacing logdedup/spanmetrics flush tickers,
-  processor/logdedupprocessor/processor.go:138-157)
-- the flagship DAG as an availableNow file-source drain (the filelog
-  tail, pkg/stanza/fileconsumer/file.go:94-166) whose micro-batches
-  each commit through the batch pipeline's ``write_unit``
-
-All transformations reuse the batch operator library — the DataFrame
-API is the same; only source/sink/trigger differ.
+The reference is a push-stream DAG (SURVEY §1.2). Here the flagship
+parse -> enrich -> route DAG runs as an availableNow file-source drain
+(the filelog tail, pkg/stanza/fileconsumer/file.go:94-166) whose
+micro-batches each commit through the batch pipeline's ``write_unit``.
+The stateful processors (tailsampling, logdedup, deltatocumulative)
+have one implementation each, as batch window expressions over
+complete input (SURVEY §2.9); there is no streaming-state variant.
 """
 
 from __future__ import annotations
@@ -20,7 +14,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.plans.checkpoint import (
     ledger_totals,
@@ -33,23 +26,6 @@ from opentelemetry_collector_contrib_spark.plans.pipeline import (
 
 PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
                 "text string, lang string")
-
-
-def windowed_counts(
-    stream: DataFrame,
-    ts_col: str = "observed_time",
-    interval: str = "10 seconds",
-    watermark: str = "30 seconds",
-    group_by: list[str] | None = None,
-) -> DataFrame:
-    """count connector over tumbling windows with late-data bound."""
-    return (stream
-            .withWatermark(ts_col, watermark)
-            .groupBy(F.window(F.col(ts_col), interval).alias("w"),
-                     *(group_by or []))
-            .agg(F.count(F.lit(1)).alias("value"))
-            .select(F.col("w.start").alias("window_start"),
-                    *(group_by or []), "value"))
 
 
 def stream_pages_pipeline(

@@ -2,13 +2,10 @@
 (geoip range join, assoc coalesce join, resource detection, dns)."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
-from opentelemetry_collector_contrib_spark.operators.aggregate import (
-    signal_to_metrics,
-    span_metrics,
-    tail_sampling,
-)
+from opentelemetry_collector_contrib_spark.operators.aggregate import span_metrics
 from opentelemetry_collector_contrib_spark.operators.enrich import (
     coalesce_assoc_join,
     dns_lookup_join,
@@ -16,6 +13,12 @@ from opentelemetry_collector_contrib_spark.operators.enrich import (
     ip_to_long,
     lookup_join,
     resource_detection,
+)
+from opentelemetry_collector_contrib_spark.operators.signaltometrics import (
+    signal_to_metrics_config,
+)
+from opentelemetry_collector_contrib_spark.operators.tailsampling import (
+    tail_sampling_policies,
 )
 
 
@@ -130,25 +133,34 @@ def test_span_metrics_exponential_auto_downscale(spark):
 
 
 def test_signal_to_metrics(spark):
-    out = signal_to_metrics(_spans(spark), [
-        {"name": "span.count", "type": "count", "attributes": ["service"]},
-        {"name": "span.duration.sum", "type": "sum", "value": "duration_ms",
-         "attributes": ["service"], "conditions": ["status_code = 'OK'"]},
-        {"name": "span.duration.hist", "type": "histogram",
-         "value": "duration_ms", "attributes": ["service"],
-         "buckets": [10.0, 100.0]},
+    spans = _spans(spark).withColumn(
+        "attributes", F.create_map(F.lit("service"), F.col("service")))
+    by_service = [{"key": "service"}]
+    out = signal_to_metrics_config(spans, [
+        {"name": "span.count", "attributes": by_service,
+         "sum": {"value": "1"}},
+        {"name": "span.duration.sum", "attributes": by_service,
+         "conditions": ['status_code == "OK"'],
+         "sum": {"value": "duration_ms"}},
+        {"name": "span.duration.hist", "attributes": by_service,
+         "histogram": {"value": "duration_ms", "buckets": [10.0, 100.0]}},
     ]).collect()
-    rows = {(r["metric_name"], r["service"], r.asDict().get("bucket_le")): r["value"]
-            for r in out}
-    assert rows[("span.count", "svc-a", None)] == 2.0
-    assert rows[("span.duration.sum", "svc-a", None)] == 5.0   # ERROR excluded
-    assert rows[("span.duration.hist", "svc-b", "100.0")] == 1.0
-    assert rows[("span.duration.hist", "svc-b", "inf")] == 1.0
+    rows = {(r["name"], r["attrs"]["service"]): r for r in out}
+    assert rows[("span.count", "svc-a")]["value_int"] == 2
+    assert rows[("span.duration.sum", "svc-a")]["value_double"] == 5.0  # ERROR excluded
+    hist = rows[("span.duration.hist", "svc-b")]
+    assert hist["bounds"] == [10.0, 100.0]
+    assert hist["bucket_counts"] == [0, 1, 1]   # 30 -> le 100, 10000 -> +inf
+    # an empty definition list is a config error, raised before any data
+    with pytest.raises(ValueError, match="definition list is empty"):
+        signal_to_metrics_config(None, [])
 
 
 def test_tail_sampling(spark):
-    kept = tail_sampling(_spans(spark), [
-        "status_code = 'ERROR'", "duration_ms > 5000"])
+    kept = tail_sampling_policies(_spans(spark), [
+        {"name": "errors-or-slow", "type": "ottl_condition",
+         "ottl_condition": {"span_conditions": [
+             'status_code == "ERROR"', "duration_ms > 5000"]}}])
     traces = {r["trace_id"] for r in kept.collect()}
     assert traces == {"t1", "t3"}       # t1 has the error, t3 is slow
     # ALL spans of a kept trace survive (decision is per-trace)

@@ -1,36 +1,9 @@
-"""Structured Streaming shapes: file-source ingest, windowed counts
-with watermark, the flagship DAG as an availableNow drain + resume +
-replay."""
+"""The flagship DAG as a Structured Streaming availableNow drain:
+file-source ingest, resume and replay."""
 
 import os
 
 from pyspark.sql import functions as F
-
-from opentelemetry_collector_contrib_spark.streaming.stream import windowed_counts
-
-SCHEMA = "id long, observed_time timestamp, kind string"
-
-
-def _write_batch(spark, path, start, n):
-    rows = [(i, f"2024-03-01 10:00:{i % 60:02d}", "a" if i % 2 == 0 else "b")
-            for i in range(start, start + n)]
-    (spark.createDataFrame(rows, "id long, observed_time string, kind string")
-     .withColumn("observed_time", F.to_timestamp("observed_time"))
-     .write.mode("append").parquet(path))
-
-
-def test_windowed_counts_memory_sink(spark, tmp_path):
-    src = str(tmp_path / "src")
-    _write_batch(spark, src, 0, 60)
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    agg = windowed_counts(stream, interval="30 seconds", group_by=["kind"])
-    q = (agg.writeStream.format("memory").queryName("win_counts")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = {(str(r["window_start"]), r["kind"]): r["value"]
-           for r in spark.sql("select * from win_counts").collect()}
-    assert got[("2024-03-01 10:00:00", "a")] == 15
-    assert got[("2024-03-01 10:00:30", "b")] == 15
 
 
 def _log_records(spark, out):
@@ -111,39 +84,3 @@ def test_pages_stream_replayed_batch_lands_once(spark, tmp_path):
     assert replayed == first and first["accepted"] == 200
     assert spark.read.parquet(out + "/routed").count() == 200
     assert os.listdir(os.path.join(out, "_ledger")) == [f"group-{last}.json"]
-
-
-def test_pages_stream_windowed_sink_counts(spark, tmp_path):
-    """Streaming count-connector aggregates over the flagship's routed
-    output: readStream of the per-sink parquet -> tumbling event-time
-    windows on warc_ts grouped by sink — per-sink totals equal the
-    batch pipeline's record counts."""
-    from opentelemetry_collector_contrib_spark.datagen import gen_pages_pdf
-    from opentelemetry_collector_contrib_spark.streaming.stream import (
-        stream_pages_pipeline)
-
-    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
-    spark.createDataFrame(gen_pages_pdf(300)).coalesce(1) \
-        .write.mode("append").parquet(src)
-    stream_pages_pipeline(spark, src, out, ckpt)
-
-    routed = spark.read.parquet(out + "/routed")
-    stream = (spark.readStream
-              .schema(routed.drop("sink").schema)
-              .option("basePath", out + "/routed")
-              .parquet(out + "/routed/group=*/sink=*"))
-    agg = windowed_counts(stream.withColumn(
-        "sink", F.regexp_extract(F.input_file_name(), r"sink=([^/]+)", 1)),
-        ts_col="warc_ts", interval="1 day", group_by=["sink"])
-    q = (agg.writeStream.format("memory").queryName("sink_counts")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = {r["sink"]: r["value"]
-           for r in spark.sql(
-               "select sink, sum(value) as value from sink_counts "
-               "group by sink").collect()}
-    want = {r["sink"]: r["cnt"]
-            for r in routed.groupBy("sink")
-            .agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    assert got == want and sum(got.values()) == 300
-

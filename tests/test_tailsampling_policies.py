@@ -333,3 +333,58 @@ def test_probabilistic_null_and_whitespace_trace_ids(spark):
             for t in ids}
     assert keep("s", 50.0) == want
     assert 0 < sum(want.values()) < len(ids) - 1
+
+
+def test_six_policy_lattice(spark):
+    """The makeDecision lattice over six policies at once: an invert
+    veto, an and-policy, span_count, latency, status_code and
+    numeric_attribute. Every span of a kept trace survives."""
+    policies = [
+        {"name": "errors", "type": "status_code",
+         "status_code": {"status_codes": ["ERROR"]}},
+        {"name": "big-qty", "type": "numeric_attribute",
+         "numeric_attribute": {"key": "qty", "min_value": 45,
+                               "max_value": 50}},
+        {"name": "not-r0", "type": "string_attribute",
+         "string_attribute": {"key": "region", "values": ["r0"],
+                              "invert_match": True}},
+        {"name": "wide", "type": "span_count",
+         "span_count": {"min_spans": 3}},
+        {"name": "slow", "type": "latency",
+         "latency": {"threshold_ms": 3000}},
+        {"name": "err-and-prod", "type": "and", "and": {
+            "and_sub_policy": [
+                {"name": "e", "type": "status_code",
+                 "status_code": {"status_codes": ["ERROR"]}},
+                {"name": "p", "type": "string_attribute",
+                 "string_attribute": {"key": "env", "values": ["prod"]}},
+            ]}},
+    ]
+
+    def row(tid, sid, status="UNSET", region="r1", qty="10", env="dev",
+            en="2024-01-01 10:00:01"):
+        return _row(tid, sid=sid, en=en, status=status,
+                    attrs={"region": region, "qty": qty, "env": env})
+
+    rows = [
+        # error in r0: the invert veto beats the error policy
+        row("VETO", "s1", status="ERROR", region="r0"),
+        # error elsewhere: kept, with its quiet span
+        row("ERR", "s1", status="ERROR"),
+        row("ERR", "s2"),
+        # big quantity: kept
+        row("QTY", "s1", qty="47"),
+        # three quiet spans: kept by span_count
+        row("WIDE", "s1"), row("WIDE", "s2"), row("WIDE", "s3"),
+        # 5 s trace: kept by latency
+        row("SLOW", "s1", en="2024-01-01 10:00:05"),
+        # prod error: kept by the and-policy (also by errors)
+        row("PROD", "s1", status="ERROR", env="prod"),
+        # nothing matches: dropped
+        row("PLAIN", "s1"),
+    ]
+    out = tail_sampling_policies(_spans(spark, rows), policies)
+    kept = {(r["trace_id"], r["span_id"]) for r in out.collect()}
+    assert {t for t, _ in kept} == {"ERR", "QTY", "WIDE", "SLOW", "PROD"}
+    assert kept == {(r[0], r[1]) for r in rows
+                    if r[0] not in ("VETO", "PLAIN")}
