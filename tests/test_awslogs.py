@@ -1,8 +1,15 @@
-"""S3 server access log decode — golden input is the reference's
-committed valid_s3_access_log.log + its expected yaml."""
+"""AWS log decoders (S3 access, VPC flow, CloudTrail, WAF, ELB,
+subscription filter, Metric Streams).  The golden inputs are
+hand-written fixtures in each documented AWS format, under
+tests/fixtures/, standing in for the awslogsencodingextension's
+testdata files of the same names (valid_s3_access_log.log, ...); the
+checked values are those of the extension's expected outputs."""
 
-TESTDATA = ("/root/reference/extension/encoding/awslogsencodingextension/"
-            "internal/unmarshaler/s3-access-log/testdata")
+import os
+
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        "fixtures")
+TESTDATA = os.path.join(FIXTURES, "awslogs", "s3-access-log")
 
 
 def _decode(spark, lines):
@@ -93,9 +100,7 @@ def test_acl_dash_is_false_and_no_shuffle(spark):
     assert "EvalPython" not in plan
 
 
-VPC_TESTDATA = ("/root/reference/extension/encoding/"
-                "awslogsencodingextension/internal/unmarshaler/"
-                "vpc-flow-log/testdata")
+VPC_TESTDATA = os.path.join(FIXTURES, "awslogs", "vpc-flow-log")
 
 
 def _vpc(spark, fields, lines):
@@ -152,9 +157,7 @@ def test_vpc_flow_quarantine(spark):
     assert [r["valid"] for r in rows] == [False, False, False, True]
 
 
-CT_TESTDATA = ("/root/reference/extension/encoding/"
-               "awslogsencodingextension/internal/unmarshaler/"
-               "cloudtraillog/testdata")
+CT_TESTDATA = os.path.join(FIXTURES, "awslogs", "cloudtraillog")
 
 
 def test_golden_cloudtrail_log(spark):
@@ -217,9 +220,7 @@ def test_cloudtrail_quirks(spark):
     assert a["rpc.system"] == "AwsApiCall"
 
 
-WAF_TESTDATA = ("/root/reference/extension/encoding/"
-                "awslogsencodingextension/internal/unmarshaler/waf/"
-                "testdata")
+WAF_TESTDATA = os.path.join(FIXTURES, "awslogs", "waf")
 
 
 def test_golden_waf_log(spark):
@@ -285,9 +286,7 @@ def test_waf_quarantine_and_status(spark):
     assert int(ok["ts"].timestamp() * 1000) == 2000
 
 
-ELB_TESTDATA = ("/root/reference/extension/encoding/"
-                "awslogsencodingextension/internal/unmarshaler/"
-                "elb-access-log/testdata")
+ELB_TESTDATA = os.path.join(FIXTURES, "awslogs", "elb-access-log")
 
 
 def _elb(spark, lines):
@@ -362,9 +361,7 @@ def test_elb_quarantine(spark):
     assert [r["valid"] for r in rows] == [False, False, False]
 
 
-SF_TESTDATA = ("/root/reference/extension/encoding/"
-               "awslogsencodingextension/internal/unmarshaler/"
-               "subscription-filter/testdata")
+SF_TESTDATA = os.path.join(FIXTURES, "awslogs", "subscription-filter")
 
 
 def test_golden_subscription_filter(spark):
@@ -399,8 +396,7 @@ def test_subscription_filter_quarantine(spark):
     assert all(r["body"] is None for r in rows)
 
 
-MS_TESTDATA = ("/root/reference/extension/encoding/"
-               "awscloudwatchmetricstreamsencodingextension/testdata/json")
+MS_TESTDATA = os.path.join(FIXTURES, "awscloudwatchmetricstreams")
 
 
 def test_golden_metric_stream(spark):

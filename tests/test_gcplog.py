@@ -1,10 +1,13 @@
-"""GCP Cloud Logging LogEntry decode — golden input is the extension's
-committed testdata/log_entry.json."""
+"""GCP Cloud Logging LogEntry decode — the golden input is a
+hand-written LogEntry in the documented JSON format
+(tests/fixtures/gcplog/log_entry.json), standing in for the
+googlecloudlogentryencodingextension's testdata/log_entry.json."""
 
 import json
+import os
 
-TESTDATA = ("/root/reference/extension/encoding/"
-            "googlecloudlogentryencodingextension/testdata")
+TESTDATA = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        "fixtures", "gcplog")
 
 
 def _decode(spark, docs):

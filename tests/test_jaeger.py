@@ -1,9 +1,15 @@
 """Jaeger proto-JSON decode — mirrors pkg/translator/jaeger/
-jaegerproto_to_traces.go semantics; golden input is the translator's
-own committed testdata."""
+jaegerproto_to_traces.go semantics; the golden input is a hand-written
+batch in the Jaeger model proto-JSON format
+(tests/fixtures/jaeger/jaegerproto_batch_01.json), standing in for the
+translator's testdata/jaegerproto_batch_01.json."""
 
 import base64
 import json
+import os
+
+TESTDATA = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        "fixtures", "jaeger")
 
 
 def _b64(hexstr: str) -> str:
@@ -141,11 +147,11 @@ def test_parent_from_field_and_references(spark):
 
 
 def test_golden_jaegerproto_batch_01(spark):
-    # the translator's own committed testdata file
+    # hand-written proto-JSON batch standing in for the translator's
+    # testdata/jaegerproto_batch_01.json
     from opentelemetry_collector_contrib_spark.sources.jaeger import (
         parse_jaeger_json_batches)
-    with open("/root/reference/pkg/translator/jaeger/testdata/"
-              "jaegerproto_batch_01.json") as f:
+    with open(f"{TESTDATA}/jaegerproto_batch_01.json") as f:
         body = f.read()
     df = spark.createDataFrame([(body,)], "body string")
     [r] = parse_jaeger_json_batches(df).collect()

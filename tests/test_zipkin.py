@@ -2,6 +2,7 @@
 to_translator.go semantics."""
 
 import json
+import os
 
 from pyspark.sql import functions as F
 
@@ -145,11 +146,13 @@ def test_no_shuffle_no_udf_plan(spark):
     assert "EvalPython" not in plan
 
 
-GOLDEN_DIR = "/root/reference/pkg/translator/zipkin/zipkinv2/testdata"
+GOLDEN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                          "fixtures", "zipkin")
 
 
 def test_golden_zipkin_v2_single(spark):
-    # the translator's own committed input (zipkin_v2_single.json)
+    # hand-written Zipkin v2 API span list standing in for the
+    # translator's testdata/zipkin_v2_single.json
     from opentelemetry_collector_contrib_spark.sources.zipkin import (
         parse_zipkin_json_spans)
     with open(f"{GOLDEN_DIR}/zipkin_v2_single.json") as f:
