@@ -271,22 +271,40 @@ def q_cumulative_to_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_interval_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """interval processor: last point per stream per tumbling hour
-    (processor/intervalprocessor/processor.go:30-113)."""
-    from opentelemetry_collector_contrib_spark.operators.metrics_state import interval_last
-    ev = _t(spark, sf_dir, "events")
-    out = interval_last(ev, ["user_id"], "1 hour", ts_col="ts")
-    return out.select("user_id", "event_id")
+    (processor/intervalprocessor/processor.go:30-113). Each event is a
+    gauge datapoint of the (user, hour) series, so every row is held
+    and the flush keeps the newest per series, earliest event_id on a
+    tie."""
+    from opentelemetry_collector_contrib_spark.operators.metrics_state import (
+        interval_process)
+    ev = _t(spark, sf_dir, "events").select(
+        "user_id", F.date_trunc("hour", "ts").alias("hour"), "ts",
+        F.col("event_id").alias("ord"), F.col("event_id").alias("value"),
+        F.lit("gauge").alias("mtype"), F.lit("unspecified").alias("temporality"),
+        F.lit(False).alias("monotonic"))
+    flush = interval_process(ev)[1]
+    return flush.select("user_id", F.col("value").alias("event_id"))
 
 
 def q_logdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """logdedup processor: per-interval duplicate grouping + counts
-    (processor/logdedupprocessor/counter.go:27-110)."""
-    ev = _t(spark, sf_dir, "events").select("ts", "event_type")
-    from opentelemetry_collector_contrib_spark.operators.aggregate import log_dedup
-    out = log_dedup(ev, interval="1 hour", ts_col="ts")
+    (processor/logdedupprocessor/counter.go:27-110). A record is an
+    (hour, event_type) log with no attributes; the representative
+    carries log_count and the second-precision first/last observed
+    timestamps as attributes."""
+    from opentelemetry_collector_contrib_spark.operators.aggregate import (
+        log_dedup_records)
+    ev = _t(spark, sf_dir, "events").select(
+        F.col("event_id").alias("ord"), "ts",
+        F.date_trunc("hour", "ts").alias("window_start"), "event_type",
+        F.create_map().cast("map<string,string>").alias("attributes"))
+    out = log_dedup_records(ev, order_col="ord", ts_col="ts")[0]
+    attrs = F.col("attributes")
     return out.select(
-        F.col("window_start"), F.col("event_type"), F.col("log_count"),
-        F.col("first_observed_timestamp"), F.col("last_observed_timestamp"))
+        "window_start", "event_type",
+        attrs["log_count"].cast("long").alias("log_count"),
+        attrs["first_observed_timestamp"].alias("first_observed_timestamp"),
+        attrs["last_observed_timestamp"].alias("last_observed_timestamp"))
 
 
 def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -302,19 +320,30 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_metrics_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """metricsgeneration processor: metric1 / metric2 arithmetic
-    (processor/metricsgenerationprocessor/config.go:40-99)."""
+    (processor/metricsgenerationprocessor/config.go:40-99) over one
+    long-form gauge pair per event_type."""
     from opentelemetry_collector_contrib_spark.operators.metrics_state import (
-        metrics_generation)
+        metrics_generation_calculate)
     ev = _t(spark, sf_dir, "events")
     long_m = (ev.groupBy("event_type")
               .agg(F.sum("value").alias("value"))
-              .withColumn("name", F.lit("value.sum"))
+              .withColumn("metric", F.lit("value.sum"))
               .unionByName(ev.groupBy("event_type")
                            .agg(F.count(F.lit(1)).cast("double").alias("value"))
-                           .withColumn("name", F.lit("value.count"))))
-    out = metrics_generation(long_m, "name", "value", "value.sum",
-                             "value.count", "divide", "value.mean", ["event_type"])
-    return out.select("event_type", F.round(F.col("value"), 4).alias("value"), "name")
+                           .withColumn("metric", F.lit("value.count"))))
+    zero = F.lit(0).cast("long")
+    long_m = long_m.select(
+        F.lit("r").alias("resource"), F.lit("s").alias("scope"), "metric",
+        F.lit("gauge").alias("mtype"), F.lit("none").alias("temporality"),
+        F.lit(False).alias("monotonic"), F.lit("").alias("unit"),
+        F.create_map(F.lit("event_type"), "event_type").alias("attrs"),
+        zero.alias("start_ts"), zero.alias("ts"), zero.alias("ord"), "value")
+    out = metrics_generation_calculate(
+        long_m, [{"name": "value.mean", "operation": "divide",
+                  "metric1": "value.sum", "metric2": "value.count"}])
+    return out.select(F.col("attrs")["event_type"].alias("event_type"),
+                      F.round(F.col("value"), 4).alias("value"),
+                      F.col("metric").alias("name"))
 
 
 def q_service_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3478,13 +3507,13 @@ def oracle_sql() -> dict[str, str]:
         "interval_last": """
             SELECT user_id, event_id FROM events
             QUALIFY row_number() OVER (PARTITION BY user_id, date_trunc('hour', ts)
-                    ORDER BY ts DESC) = 1
+                    ORDER BY ts DESC, event_id) = 1
         """,
         "logdedup": """
             SELECT date_trunc('hour', ts) AS window_start, event_type,
                    COUNT(*) AS log_count,
-                   MIN(ts) AS first_observed_timestamp,
-                   MAX(ts) AS last_observed_timestamp
+                   strftime(MIN(ts), '%Y-%m-%dT%H:%M:%SZ') AS first_observed_timestamp,
+                   strftime(MAX(ts), '%Y-%m-%dT%H:%M:%SZ') AS last_observed_timestamp
             FROM events GROUP BY 1, 2
         """,
         "histogram": """

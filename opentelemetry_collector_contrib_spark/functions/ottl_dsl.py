@@ -1112,6 +1112,15 @@ def compile_value(expr: str):
     return _lift(v)
 
 
+def any_condition(conds: list[str]) -> Column:
+    """OR of OTTL boolean conditions, a NULL result counting as no match
+    (error_mode=ignore); an empty list matches nothing."""
+    out = F.lit(False)
+    for c in conds:
+        out = out | F.coalesce(Parser(_tokenize(c)).bool_expr(), F.lit(False))
+    return out
+
+
 def transform_statements(df: DataFrame, statements: list[str],
                          error_mode: str = "ignore",
                          group_where: str | None = None) -> DataFrame:

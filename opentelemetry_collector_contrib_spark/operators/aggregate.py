@@ -148,26 +148,6 @@ def histogram_metrics(df: DataFrame, value: str | Column, buckets: list[float],
             .withColumn("metric_name", F.lit(metric_name)))
 
 
-def log_dedup(df: DataFrame, interval: str = "10 seconds",
-              exclude_fields: list[str] | None = None,
-              ts_col: str = "observed_time",
-              body_col: str = "body") -> DataFrame:
-    """logdedup processor (processor/logdedupprocessor/counter.go:27-110):
-    within each interval, group identical records (all non-excluded
-    fields) and emit one representative + log_count + first/last
-    observed timestamps. Tumbling interval = F.window group key.
-    """
-    excluded = set(exclude_fields or []) | {ts_col}
-    key_cols = [c for c in df.columns if c not in excluded and not c.startswith("_")]
-    agged = (df.groupBy(F.window(F.col(ts_col), interval).alias("w"),
-                        *[F.col(c) for c in key_cols])
-             .agg(F.count(F.lit(1)).alias("log_count"),
-                  F.min(ts_col).alias("first_observed_timestamp"),
-                  F.max(ts_col).alias("last_observed_timestamp")))
-    return agged.withColumn("window_start", F.col("w.start")) \
-                .withColumn("window_end", F.col("w.end")).drop("w")
-
-
 def log_dedup_records(
     df: DataFrame,
     order_col: str,
@@ -191,10 +171,6 @@ def log_dedup_records(
     (minus ``exclude_fields`` paths like "attributes.remove_me") +
     body + severity — or ONLY the ``include_fields`` paths when given
     ("attributes.k"; "body.k" extracts from a JSON-encoded map body).
-    ``log_dedup`` (above) is the window-aggregate shape of the same
-    processor for metric-style consumers; this variant reproduces the
-    record stream itself (golden-parity tested against the reference's
-    committed expected outputs).
     """
 
     def path_expr(p: str) -> Column:

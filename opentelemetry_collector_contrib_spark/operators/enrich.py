@@ -184,7 +184,7 @@ def service_graph_metrics(
     bounds = list(latency_bounds or SERVICE_GRAPH_DEFAULT_BOUNDS)
     has_resource = "resource" in spans.columns
 
-    def attr(col_df, key):
+    def attr(key):
         span_v = F.col("attributes").getItem(key)
         if has_resource:
             return F.coalesce(F.col("resource").getItem(key), span_v)
@@ -196,13 +196,13 @@ def service_graph_metrics(
     def dim_entries(side):
         entries = []
         for d in dimensions:
-            entries.append((f"{side}_{d}", attr(spans, d)))
+            entries.append((f"{side}_{d}", attr(d)))
         return entries
 
     client = spans.filter(F.col("kind").isin(_SK_CLIENT, _SK_PRODUCER))
     db_name = F.lit(None).cast("string")
     for k in database_name_attributes:
-        db_name = F.coalesce(db_name, attr(spans, k))
+        db_name = F.coalesce(db_name, attr(k))
     peer = F.lit(None).cast("string")
     for k in virtual_node_peer_attributes:
         peer = F.coalesce(peer, F.col("attributes").getItem(k))

@@ -223,7 +223,7 @@ def filter_processor_config(config: dict) -> dict:
     context paths (metric.name, span.kind, spanevent.*, …) all work.
     """
     from opentelemetry_collector_contrib_spark.functions.ottl_dsl import (
-        Parser, _tokenize)
+        any_condition)
 
     valid = {"logs": ("log_record",),
              "metrics": ("metric", "datapoint"),
@@ -243,6 +243,5 @@ def filter_processor_config(config: dict) -> dict:
             conds = section.get(ctx) or []
             if not conds:
                 continue
-            cols = [Parser(_tokenize(c)).bool_expr() for c in conds]
-            out[(signal, ctx)] = filter_processor(cols)
+            out[(signal, ctx)] = filter_processor([any_condition(conds)])
     return out

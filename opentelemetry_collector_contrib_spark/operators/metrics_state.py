@@ -49,17 +49,6 @@ def delta_to_rate(df: DataFrame, stream_keys: list[str],
     return df.withColumn(out_col, F.col(value_col) / elapsed)
 
 
-def interval_last(df: DataFrame, stream_keys: list[str], interval: str,
-                  ts_col: str = "ts") -> DataFrame:
-    """interval processor (processor/intervalprocessor/processor.go:30-113):
-    keep only the LAST point per stream per tumbling interval —
-    top-1-per-group via row_number over a desc window."""
-    w = (W.partitionBy(*stream_keys, F.window(F.col(ts_col), interval))
-         .orderBy(F.col(ts_col).desc()))
-    return (df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn"))
-
-
 def metric_start_time(df: DataFrame, stream_keys: list[str],
                       ts_col: str = "ts",
                       out_col: str = "start_time") -> DataFrame:
@@ -68,29 +57,6 @@ def metric_start_time(df: DataFrame, stream_keys: list[str],
     observed timestamp."""
     w = W.partitionBy(*stream_keys)
     return df.withColumn(out_col, F.min(ts_col).over(w))
-
-
-def metrics_generation(df: DataFrame, name_col: str, value_col: str,
-                       metric1: str, metric2: str, op: str,
-                       out_name: str, group_by: list[str]) -> DataFrame:
-    """metricsgeneration processor (processor/metricsgenerationprocessor/
-    config.go:40-99): new metric = metric1 <op> metric2, matched on the
-    group columns. Implemented as a pivot-style self-join-free
-    conditional aggregation (one shuffle)."""
-    ops = {
-        "add": lambda a, b: a + b,
-        "subtract": lambda a, b: a - b,
-        "multiply": lambda a, b: a * b,
-        "divide": lambda a, b: F.when(b != 0, a / b),
-    }
-    if op not in ops:
-        raise ValueError(f"unknown op {op}")
-    m1 = F.max(F.when(F.col(name_col) == metric1, F.col(value_col)))
-    m2 = F.max(F.when(F.col(name_col) == metric2, F.col(value_col)))
-    return (df.filter(F.col(name_col).isin(metric1, metric2))
-            .groupBy(*group_by)
-            .agg(ops[op](m1, m2).alias(value_col))
-            .withColumn(name_col, F.lit(out_name)))
 
 
 def metrics_transform(df: DataFrame, rules: list[dict],
@@ -168,10 +134,7 @@ def interval_process(
     Series identity = every column except the datapoint payload
     (``value_col``), timestamp and arrival order; the winner per
     series is the max-``ts_col`` datapoint with earliest arrival as
-    the deterministic tie-break. ``interval_last`` (above) is the
-    narrow sum/gauge shape of the same processor for metric pipelines;
-    this variant reproduces the processor's full routing for
-    golden-parity testing and mixed-type metric streams.
+    the deterministic tie-break.
     """
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F

@@ -42,11 +42,8 @@ def _conditions(conds: list[str] | None) -> Column | None:
     if not conds:
         return None
     from opentelemetry_collector_contrib_spark.functions.ottl_dsl import (
-        Parser, _tokenize)
-    out = F.lit(False)
-    for c in conds:
-        out = out | F.coalesce(Parser(_tokenize(c)).bool_expr(), F.lit(False))
-    return out
+        any_condition)
+    return any_condition(conds)
 
 
 OUT_SCHEMA = ("name string, description string, unit string, mtype string, "

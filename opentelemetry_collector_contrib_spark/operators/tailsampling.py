@@ -131,12 +131,9 @@ def _span_policy_decision(df: DataFrame, p: dict):
     if t == "ottl_condition":
         cfg = p.get("ottl_condition", p)
         from opentelemetry_collector_contrib_spark.functions.ottl_dsl import (
-            Parser, _tokenize)
-        m = F.lit(False)
-        for cond in (cfg.get("span_conditions") or []) + \
-                (cfg.get("spanevent_conditions") or []):
-            m = m | F.coalesce(Parser(_tokenize(cond)).bool_expr(),
-                               F.lit(False))
+            any_condition)
+        m = any_condition((cfg.get("span_conditions") or [])
+                          + (cfg.get("spanevent_conditions") or []))
         return m, lambda am: _plain_or_invert(am, False)
     raise ValueError(f"unsupported tailsampling policy type {t!r}")
 

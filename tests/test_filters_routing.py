@@ -12,9 +12,8 @@ from opentelemetry_collector_contrib_spark.operators.metrics_state import (
     cumulative_to_delta,
     delta_to_cumulative,
     delta_to_rate,
-    interval_last,
     metric_start_time,
-    metrics_generation,
+    metrics_generation_calculate,
 )
 from opentelemetry_collector_contrib_spark.operators.recombine import recombine
 from opentelemetry_collector_contrib_spark.operators.routing import (
@@ -145,11 +144,21 @@ def test_metric_start_time(spark):
 
 
 def test_metrics_generation_divide_by_zero(spark):
-    rows = [("g", "m1", 10.0), ("g", "m2", 0.0)]
-    df = spark.createDataFrame(rows, "grp string, name string, value double")
-    out = metrics_generation(df, "name", "value", "m1", "m2", "divide",
-                             "ratio", ["grp"]).first()
-    assert out["value"] is None  # divide-by-zero -> null, not error
+    rows = [(name, {"grp": grp}, v)
+            for grp, name, v in [("zero", "m1", 10.0), ("zero", "m2", 0.0),
+                                 ("ok", "m1", 10.0), ("ok", "m2", 4.0)]]
+    df = spark.createDataFrame(
+        rows, "metric string, attrs map<string,string>, value double")
+    df = df.selectExpr("'r' AS resource", "'s' AS scope", "metric",
+                       "'gauge' AS mtype", "'none' AS temporality",
+                       "false AS monotonic", "'' AS unit", "attrs",
+                       "0L AS start_ts", "0L AS ts", "0L AS ord", "value")
+    out = metrics_generation_calculate(
+        df, [{"name": "ratio", "operation": "divide",
+              "metric1": "m1", "metric2": "m2"}]).collect()
+    # divide-by-zero drops the datapoint (calculateValue error path)
+    assert [(r["attrs"]["grp"], r["metric"], r["value"]) for r in out] == [
+        ("ok", "ratio", 2.5)]
 
 
 def test_failover_write(spark, tmp_path):

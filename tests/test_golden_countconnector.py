@@ -23,11 +23,11 @@ from opentelemetry_collector_contrib_spark.operators.aggregate import (
 from opentelemetry_collector_contrib_spark.sources.otlpjson import (
     parse_otlp_json_logs,
 )
+from tests.reference_testdata import needs_testdata
 
 TESTDATA = "/root/reference/connector/countconnector/testdata/logs"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(TESTDATA), reason="reference testdata not present")
+pytestmark = needs_testdata(TESTDATA)
 
 # TestLogsToMetrics config matrix (connector_test.go:609-660)
 CASES = {

@@ -16,10 +16,9 @@ import os
 import pytest
 import yaml
 
-TESTDATA = "/root/reference/processor/deltatocumulativeprocessor/testdata"
+from tests.reference_testdata import needs_testdata
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(TESTDATA), reason="reference testdata not present")
+TESTDATA = "/root/reference/processor/deltatocumulativeprocessor/testdata"
 
 SCHEMA = ("res string, scope string, metric string, mtype string, "
           "attrs string, ord long, start_ns long, ts_ns long, "
@@ -142,6 +141,7 @@ def load_out(doc):
     return convert, sorted(passthrough)
 
 
+@needs_testdata(TESTDATA)
 @pytest.mark.parametrize("case",
                          ["timestamps", "histograms", "tracking",
                           "notemporality-ignored"])
@@ -249,6 +249,7 @@ def expo_canon(dicts):
         for d in dicts)
 
 
+@needs_testdata(TESTDATA)
 def test_deltatocumulative_exponential_golden(spark):
     """The reference's OWN exponential testdata golden (scale-merge via
     downscale + bucket union), previously documented out-of-scope —

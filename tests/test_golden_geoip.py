@@ -13,10 +13,9 @@ import os
 import pytest
 import yaml
 
-TESTDATA = "/root/reference/processor/geoipprocessor/testdata"
+from tests.reference_testdata import needs_testdata
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(TESTDATA), reason="reference testdata not present")
+TESTDATA = "/root/reference/processor/geoipprocessor/testdata"
 
 # the mocked provider's attribute set for 1.2.3.4 (values rendered in
 # the flat model's string attribute encoding)
@@ -101,6 +100,7 @@ def test_malformed_ipv6_falls_through_to_next_attribute(spark):
     assert out["v6ok"].get("geo.city_name") == "V6"
 
 
+@needs_testdata(TESTDATA)
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_geoip_golden(spark, case):
     from opentelemetry_collector_contrib_spark.operators.enrich import (

@@ -13,10 +13,11 @@ import os
 import pytest
 import yaml
 
+from tests.reference_testdata import needs_testdata
+
 TESTDATA = "/root/reference/processor/intervalprocessor/testdata"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(TESTDATA), reason="reference testdata not present")
+pytestmark = needs_testdata(TESTDATA)
 
 SCHEMA = ("resource string, scope string, metric string, mtype string, "
           "temporality string, monotonic boolean, "

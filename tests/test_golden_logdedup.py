@@ -14,10 +14,11 @@ from datetime import datetime, timezone
 import pytest
 import yaml
 
+from tests.reference_testdata import needs_testdata
+
 TESTDATA = "/root/reference/processor/logdedupprocessor/testdata"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(TESTDATA), reason="reference testdata not present")
+pytestmark = needs_testdata(TESTDATA)
 
 
 def _val(v: dict) -> str:

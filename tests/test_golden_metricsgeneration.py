@@ -14,10 +14,9 @@ import os
 import pytest
 import yaml
 
-TESTDATA = "/root/reference/processor/metricsgenerationprocessor/testdata"
+from tests.reference_testdata import needs_testdata
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(TESTDATA), reason="reference testdata not present")
+TESTDATA = "/root/reference/processor/metricsgenerationprocessor/testdata"
 
 SCHEMA = ("resource string, scope string, metric string, mtype string, "
           "temporality string, monotonic boolean, unit string, "
@@ -97,6 +96,7 @@ CASES = [
 ]
 
 
+@needs_testdata(TESTDATA)
 @pytest.mark.parametrize("d,case,match", CASES)
 def test_metricsgeneration_golden(spark, d, case, match):
     from opentelemetry_collector_contrib_spark.operators.metrics_state import (

@@ -8,13 +8,13 @@ produce nothing on the logs path.
 
 import os
 
-import pytest
 import yaml
+
+from tests.reference_testdata import needs_testdata
 
 TESTDATA = "/root/reference/connector/otlpjsonconnector/testdata/logsToLogs"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(TESTDATA), reason="reference testdata not present")
+pytestmark = needs_testdata(TESTDATA)
 
 
 def _attrs(attr_list):

@@ -10,13 +10,13 @@ replaces with a principled NULL (documented in sources/otlpjson.py).
 
 import os
 
-import pytest
 import yaml
+
+from tests.reference_testdata import needs_testdata
 
 TESTDATA = "/root/reference/connector/otlpjsonconnector/testdata"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(TESTDATA), reason="reference testdata not present")
+pytestmark = needs_testdata(TESTDATA)
 
 
 def _attrs(attr_list):

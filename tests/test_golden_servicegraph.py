@@ -12,10 +12,11 @@ import os
 import pytest
 import yaml
 
+from tests.reference_testdata import needs_testdata
+
 TESTDATA = "/root/reference/connector/servicegraphconnector/testdata"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(TESTDATA), reason="reference testdata not present")
+pytestmark = needs_testdata(TESTDATA)
 
 SCHEMA = ("trace_id string, span_id string, parent_span_id string, "
           "service string, kind int, status_code int, "

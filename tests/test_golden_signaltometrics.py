@@ -16,10 +16,11 @@ import os
 import pytest
 import yaml
 
+from tests.reference_testdata import needs_testdata
+
 TESTDATA = "/root/reference/connector/signaltometricsconnector/testdata"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(TESTDATA), reason="reference testdata not present")
+pytestmark = needs_testdata(TESTDATA)
 
 # the test harness's connector identity (visible in every output.yaml)
 IDENTITY = {

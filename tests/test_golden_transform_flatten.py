@@ -9,13 +9,13 @@ TestProcessLogsWithoutFlatten / WithFlatten).
 
 import os
 
-import pytest
 import yaml
+
+from tests.reference_testdata import needs_testdata
 
 TESTDATA = "/root/reference/processor/transformprocessor/testdata/logs"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(TESTDATA), reason="reference testdata not present")
+pytestmark = needs_testdata(TESTDATA)
 
 STATEMENTS = [
     'set(resource.attributes["host.name"], attributes["host.name"])',
