@@ -309,13 +309,26 @@ def q_logdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """spanmetrics/signaltometrics explicit-bucket histogram
-    (connector/spanmetricsconnector/connector.go:249-294)."""
-    from opentelemetry_collector_contrib_spark.operators.aggregate import (
-        histogram_metrics)
-    ev = _t(spark, sf_dir, "events")
-    out = histogram_metrics(ev, "value", [50.0, 100.0, 150.0, 200.0],
-                            ["event_type"], metric_name="event.value.hist")
-    return out.select("metric_name", "event_type", "bucket_le", "bucket_count")
+    (connector/spanmetricsconnector/connector.go:249-294): one
+    signaltometrics histogram def, exploded to one row per non-empty
+    upper-inclusive bucket."""
+    from opentelemetry_collector_contrib_spark.operators.signaltometrics import (
+        signal_to_metrics_config)
+    bounds = [50.0, 100.0, 150.0, 200.0]
+    ev = _t(spark, sf_dir, "events").select(
+        "value", F.create_map(F.lit("event_type"), F.col("event_type"))
+        .alias("attributes"))
+    out = signal_to_metrics_config(ev, [
+        {"name": "event.value.hist", "attributes": [{"key": "event_type"}],
+         "histogram": {"value": "value", "buckets": bounds}}])
+    labels = F.array(*[F.lit(str(b)) for b in bounds], F.lit("inf"))
+    return (out.select(F.col("name").alias("metric_name"),
+                       F.col("attrs")["event_type"].alias("event_type"),
+                       F.posexplode("bucket_counts"))
+            .filter(F.col("col") > 0)
+            .select("metric_name", "event_type",
+                    F.element_at(labels, F.col("pos") + 1).alias("bucket_le"),
+                    F.col("col").alias("bucket_count")))
 
 
 def q_metrics_generation(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,7 +18,6 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from opentelemetry_collector_contrib_spark.fields import field_col
 
@@ -126,26 +125,6 @@ def sum_metrics(df: DataFrame, metrics: list[MetricDef],
     skipped).
     """
     return metric_pass([], metrics, resource_keys, reference_quirks)(df)
-
-
-def histogram_metrics(df: DataFrame, value: str | Column, buckets: list[float],
-                      group_by: list[str], metric_name: str = "histogram") -> DataFrame:
-    """Explicit-bucket histogram (signaltometrics / spanmetrics shape,
-    connector/spanmetricsconnector/connector.go:249-294): native
-    width_bucket-style CASE bucketing + groupBy, fully shuffled once.
-
-    Output: group cols + bucket_le (upper bound as string, 'inf' last)
-    + bucket_count — cumulative-style per-bucket counts are left to the
-    consumer; these are per-bucket (delta) counts.
-    """
-    v = F.col(value) if isinstance(value, str) else value
-    bucket = F.lit("inf")
-    for b in sorted(buckets, reverse=True):
-        bucket = F.when(v <= F.lit(b), F.lit(str(b))).otherwise(bucket)
-    return (df.withColumn("bucket_le", bucket)
-            .groupBy(*group_by, "bucket_le")
-            .agg(F.count(F.lit(1)).alias("bucket_count"))
-            .withColumn("metric_name", F.lit(metric_name)))
 
 
 def log_dedup_records(
@@ -278,6 +257,88 @@ def exceptions_connector(df: DataFrame, dims: list[str],
 
 DEFAULT_SPANMETRICS_BUCKETS_MS = [2, 4, 6, 8, 10, 50, 100, 200, 400, 800,
                                   1000, 1400, 2000, 5000, 10000, 15000]
+MAX_SCALE = 20  # go-expohisto's (and the SDK mapping's) largest scale
+
+
+def explicit_bucket(v: Column, bounds: list[float]) -> Column:
+    """Explicit-histogram bucket index of ``v``: sort.SearchFloat64s
+    (bounds, v), the number of bounds strictly below v, so buckets are
+    upper-inclusive (explicithistogram.go Aggregate). NULL and NaN land
+    in the overflow bucket ``len(bounds)``."""
+    idx = F.lit(len(bounds))
+    for i, b in reversed(list(enumerate(sorted(bounds)))):
+        idx = F.when(v <= F.lit(float(b)), F.lit(i)).otherwise(idx)
+    return idx
+
+
+def expo_downscale(df: DataFrame, keys: list[str], value: Column,
+                   max_size: int) -> DataFrame:
+    """go-expohisto's end state, per row: each series (``keys``) starts
+    at MAX_SCALE and halves its resolution until the bucket span of its
+    positive values fits ``max_size``. Adds the series' shift ``_h``
+    (scale = MAX_SCALE - _h) and the row's bucket ``_bi`` at that
+    scale, NULL for v <= 0 (the zero bucket); a series with no positive
+    value keeps go-expohisto's zero-state scale 0.
+
+    Downscaling is index-exact (idx_s(v) == floor(idx_20(v) /
+    2^(20-s)), the spec's perfect subsetting), so the shape is a
+    map-side-combined min/max of the scale-20 index per series and a
+    BROADCAST of that tiny (keys, _h) frame back onto the rows. Callers
+    then aggregate per (keys, _h, _bi) and per (keys, _h): no row ever
+    holds more than ``max_size`` buckets.
+    """
+    df = df.withColumn("_i", F.when(value > 0, (F.ceil(
+        F.log2(value) * F.lit(float(2 ** MAX_SCALE))) - 1).cast("long")))
+    # smallest shift h with downscaled span <= max_size (floor division
+    # == arithmetic shift for negative indices; |idx| < 2^40 so the
+    # double division is exact). Shifts may exceed MAX_SCALE — the
+    # spec's scale floor is -10 (negative scales = multi-octave
+    # buckets), and at scale -10 any double-representable range fits
+    # in <= 4 buckets, so the search range is always sufficient.
+    max_shift = MAX_SCALE + 10
+    span_fits = lambda h: (  # noqa: E731
+        F.floor(F.col("_mx") / F.pow(F.lit(2.0), h))
+        - F.floor(F.col("_mn") / F.pow(F.lit(2.0), h)) + 1) <= max_size
+    shifts = (df.groupBy(*keys)
+              .agg(F.min("_i").alias("_mn"), F.max("_i").alias("_mx"))
+              .select(*keys, F.when(
+                  F.col("_mn").isNull(), F.lit(MAX_SCALE)).otherwise(
+                  F.coalesce(
+                      F.array_min(F.filter(
+                          F.sequence(F.lit(0), F.lit(max_shift)),
+                          span_fits)),
+                      F.lit(max_shift))).alias("_h")))
+    # null-safe keys: a row whose key is NULL still has a series (as in
+    # span_metrics); a plain equi-join would drop it
+    skeys = [f"_k{i}" for i in range(len(keys))]
+    on = [F.col(k).eqNullSafe(F.col(sk)) for k, sk in zip(keys, skeys)]
+    bucket = F.floor(F.col("_i") / F.pow(F.lit(2.0), F.col("_h")))
+    return (df.join(F.broadcast(shifts.toDF(*skeys, "_h")), on=on)
+            .withColumn("_bi", bucket.cast("long")).drop("_i", *skeys))
+
+
+def _span_error(df: DataFrame) -> Column:
+    return F.coalesce(F.col("status_code") == "ERROR", F.lit(False)) \
+        if "status_code" in df.columns else F.lit(False)
+
+
+def _red_per_bucket(df: DataFrame, keys: list, duration: Column,
+                    err: Column) -> DataFrame:
+    """Stage one of both spanmetrics modes: calls (``_bn``), errors
+    (``_be``) and duration sum (``_bd``) per (dims, bucket). Durations
+    are summed as decimal(28,6): exact and associative, so re-summing
+    the per-bucket partials cannot land on a different rounding
+    boundary than a single-pass double sum would (fp addition is
+    non-associative; decimal is not)."""
+    return df.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("_bn"),
+        F.sum(err.cast("long")).alias("_be"),
+        F.sum(duration.cast("decimal(28,6)")).alias("_bd"))
+
+
+def _red_totals() -> list[Column]:
+    return [F.sum("_bn").alias("calls"), F.sum("_be").alias("errors"),
+            F.round(F.sum("_bd"), 6).cast("double").alias("duration_sum")]
 
 
 def span_metrics(df: DataFrame, dims: list[str],
@@ -304,7 +365,7 @@ def span_metrics(df: DataFrame, dims: list[str],
     Output: dims [+ otel_metric_overflow] + calls + errors +
     per-bucket counts as MAP<bucket_le, count> (delta temporality).
     """
-    buckets = buckets or DEFAULT_SPANMETRICS_BUCKETS_MS
+    bounds = sorted(float(b) for b in buckets or DEFAULT_SPANMETRICS_BUCKETS_MS)
     overflow_col = []
     if cardinality_limit:
         if not order_col:
@@ -326,116 +387,48 @@ def span_metrics(df: DataFrame, dims: list[str],
         overflow_col = ["otel_metric_overflow"]
         dims = [*dims, *overflow_col]
     v = F.col(duration_col)
-    bucket = F.lit("inf")
-    for b in sorted(buckets, reverse=True):
-        bucket = F.when(v <= F.lit(float(b)), F.lit(str(float(b)))).otherwise(bucket)
-    err = F.coalesce(F.col("status_code") == "ERROR", F.lit(False)) \
-        if "status_code" in df.columns else F.lit(False)
-    # durations are summed as decimal(28,6): exact and associative, so
-    # the two-stage partial aggregation (per-bucket then re-sum) cannot
-    # land on a different rounding boundary than a single-pass double
-    # sum would (fp addition is non-associative; decimal is not).
-    per_bucket = (df.withColumn("_ble", bucket)
-                  .groupBy(*dims, "_ble")
-                  .agg(F.count(F.lit(1)).alias("_bn"),
-                       F.sum(err.cast("long")).alias("_be"),
-                       F.sum(v.cast("decimal(28,6)")).alias("_bd")))
+    labels = F.array(*[F.lit(str(b)) for b in bounds], F.lit("inf"))
+    per_bucket = _red_per_bucket(
+        df.withColumn("_ble", F.element_at(labels, explicit_bucket(v, bounds) + 1)),
+        [*dims, "_ble"], v, _span_error(df))
     return (per_bucket.groupBy(*dims)
-            .agg(F.sum("_bn").alias("calls"),
-                 F.sum("_be").alias("errors"),
-                 F.round(F.sum("_bd"), 6).cast("double").alias("duration_sum"),
+            .agg(*_red_totals(),
                  F.map_from_entries(F.sort_array(F.collect_list(
                      F.struct(F.col("_ble"), F.col("_bn"))))).alias("bucket_counts")))
 
 
 def span_metrics_exponential(df: DataFrame, dims: list[str],
                              duration_col: str = "duration_ms",
-                             scale: int | None = None,
-                             max_size: int = 160,
-                             scale_cap: int = 20) -> DataFrame:
+                             max_size: int = 160) -> DataFrame:
     """spanmetrics exponential-histogram mode
     (connector/spanmetricsconnector/config.go:23-123 ``histogram:
     exponential``): base-2 exponential buckets per the OTel spec —
     bucket index of value v at scale s is ceil(log2(v) * 2^s) - 1
     (base = 2^(2^-s)); zero/negative durations count in zero_count.
 
-    Default mode mirrors the reference's go-expohisto auto-downscale:
-    each dimension group starts at ``scale_cap`` (the SDK mapping cap)
-    and halves resolution until its observed bucket-index span fits
-    ``max_size`` (default 160, config.go max_size) — emitted as a
-    per-group ``scale`` column. Downscaling is index-exact
-    (idx_s(v) == floor(idx_cap(v) / 2^(cap-s)), the spec's perfect
-    subsetting), so this is a two-pass Spark shape: a cheap
-    map-side-combined min/max per group, a BROADCAST of the tiny
-    (dims, shift) frame back onto the spans, then the usual two-stage
-    bucket aggregation — three shuffles total, none over wide rows.
-    Passing an explicit ``scale`` keeps the fixed single-pass form
-    (two shuffles, no scale column). Output: dims [+ scale] + calls +
-    errors + duration_sum(decimal-exact) + zero_count +
-    MAP<bucket_index, count>.
+    Each dimension group gets the reference's go-expohisto
+    auto-downscale (``expo_downscale``): the largest scale <= MAX_SCALE
+    whose observed bucket-index span fits ``max_size`` (default 160,
+    config.go max_size), emitted as a per-group ``scale`` column, then
+    the two-stage bucket aggregation — three shuffles total, none over
+    wide rows. Output: dims + scale + calls + errors +
+    duration_sum(decimal-exact) + zero_count + MAP<bucket_index, count>.
     """
-    v = F.col(duration_col)
-    err = F.coalesce(F.col("status_code") == "ERROR", F.lit(False)) \
-        if "status_code" in df.columns else F.lit(False)
-
-    def _agg(grouped):
-        return grouped.agg(
-            F.sum("_bn").alias("calls"),
-            F.sum("_be").alias("errors"),
-            F.round(F.sum("_bd"), 6).cast("double").alias("duration_sum"),
-            F.sum(F.when(F.col("_bi").isNull(), F.col("_bn"))
-                  .otherwise(F.lit(0))).alias("zero_count"),
-            F.map_from_entries(F.sort_array(F.collect_list(
-                F.when(F.col("_bi").isNotNull(),
-                       F.struct(F.col("_bi"), F.col("_bn"))))))
-            .alias("bucket_counts"))
-
-    if scale is not None:
-        idx = (F.ceil(F.log2(v) * F.lit(float(2 ** scale))) - 1).cast("long")
-        per_bucket = (df.withColumn("_bi", F.when(v > 0, idx))
-                      .groupBy(*dims, "_bi")
-                      .agg(F.count(F.lit(1)).alias("_bn"),
-                           F.sum(err.cast("long")).alias("_be"),
-                           F.sum(v.cast("decimal(28,6)")).alias("_bd")))
-        return _agg(per_bucket.groupBy(*dims))
-
-    idx_cap = F.when(
-        v > 0,
-        (F.ceil(F.log2(v) * F.lit(float(2 ** scale_cap))) - 1).cast("long"))
-    base = df.select(*dims, v.alias("_d"), err.alias("_e"),
-                     idx_cap.alias("_i"))
-    # smallest shift h with downscaled span <= max_size (floor division
-    # == arithmetic shift for negative indices; |idx| < 2^40 so the
-    # double division is exact). Shifts may exceed scale_cap — the
-    # spec's scale floor is -10 (negative scales = multi-octave
-    # buckets), and at scale -10 any double-representable range fits
-    # in <= 4 buckets, so the search range is always sufficient.
-    max_shift = scale_cap + 10
-    span_fits = lambda h: (  # noqa: E731
-        F.floor(F.col("_mx") / F.pow(F.lit(2.0), h))
-        - F.floor(F.col("_mn") / F.pow(F.lit(2.0), h)) + 1) <= max_size
-    shifts = (base.groupBy(*dims)
-              .agg(F.min("_i").alias("_mn"), F.max("_i").alias("_mx"))
-              .select(*dims, F.when(
-                  # zero/negative-only group: go-expohisto zero state
-                  # keeps scale 0
-                  F.col("_mn").isNull(), F.lit(scale_cap)).otherwise(
-                  F.coalesce(
-                      F.array_min(F.filter(
-                          F.sequence(F.lit(0), F.lit(max_shift)),
-                          span_fits)),
-                      F.lit(max_shift))).alias("_h")))
-    joined = base.join(F.broadcast(shifts), on=list(dims))
-    bucket = F.floor(F.col("_i") / F.pow(F.lit(2.0), F.col("_h"))) \
-        .cast("long")
-    per_bucket = (joined.withColumn("_bi", bucket)
-                  .groupBy(*dims, "_h", "_bi")
-                  .agg(F.count(F.lit(1)).alias("_bn"),
-                       F.sum(F.col("_e").cast("long")).alias("_be"),
-                       F.sum(F.col("_d").cast("decimal(28,6)")).alias("_bd")))
-    out = _agg(per_bucket.groupBy(*dims, "_h"))
+    base = df.select(*dims, F.col(duration_col).alias("_d"),
+                     _span_error(df).alias("_e"))
+    per_bucket = _red_per_bucket(
+        expo_downscale(base, dims, F.col("_d"), max_size),
+        [*dims, "_h", "_bi"], F.col("_d"), F.col("_e"))
+    out = per_bucket.groupBy(*dims, "_h").agg(
+        *_red_totals(),
+        F.sum(F.when(F.col("_bi").isNull(), F.col("_bn"))
+              .otherwise(F.lit(0))).alias("zero_count"),
+        F.map_from_entries(F.sort_array(F.collect_list(
+            F.when(F.col("_bi").isNotNull(),
+                   F.struct(F.col("_bi"), F.col("_bn"))))))
+        .alias("bucket_counts"))
     return out.select(*dims,
-                      (F.lit(scale_cap) - F.col("_h")).cast("int")
+                      (F.lit(MAX_SCALE) - F.col("_h")).cast("int")
                       .alias("scale"),
                       "calls", "errors", "duration_sum", "zero_count",
                       "bucket_counts")

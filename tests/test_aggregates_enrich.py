@@ -1,6 +1,8 @@
 """spanmetrics / signaltometrics / tail sampling / enrichment joins
 (geoip range join, assoc coalesce join, resource detection, dns)."""
 
+import math
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -34,6 +36,22 @@ def _spans(spark):
               "duration_ms double, status_code string")
 
 
+def brute(values, max_size, cap=20):
+    """go-expohisto end state by hand: the scale-20 index of each value,
+    then the smallest shift whose bucket span fits max_size."""
+    idx = [math.ceil(math.log2(v) * 2 ** cap) - 1 for v in values]
+    h = next(hh for hh in range(cap + 11)  # scale floor is -10
+             if (max(idx) >> hh) - (min(idx) >> hh) + 1 <= max_size)
+    buckets = {}
+    for i in idx:
+        buckets[i >> h] = buckets.get(i >> h, 0) + 1
+    return cap - h, buckets
+
+
+WIDE = [float(2 ** k) for k in range(12)]
+NARROW = [100.0 + i for i in range(8)]
+
+
 def test_span_metrics(spark):
     out = {r["service"]: r for r in span_metrics(_spans(spark), ["service"]).collect()}
     assert out["svc-a"]["calls"] == 2
@@ -47,23 +65,23 @@ def test_span_metrics(spark):
 
 def test_span_metrics_exponential(spark):
     """Exponential-histogram mode: OTel base-2 bucket index at scale s
-    is ceil(log2(v) * 2^s) - 1 — spot-check the spec's fixed points
-    (v=1 -> index -1, v=2 -> 2^s - 1)."""
+    is ceil(log2(v) * 2^s) - 1 — spot-check the spec's fixed points at
+    the auto-downscaled scale (v=1 -> index -1, v=2 -> 2^s - 1)."""
     from opentelemetry_collector_contrib_spark.operators.aggregate import (
         span_metrics_exponential)
     rows = [("svc", 1.0, "OK"), ("svc", 2.0, "OK"), ("svc", 900.0, "ERROR"),
             ("svc", 0.0, "OK")]
     df = spark.createDataFrame(
         rows, "service string, duration_ms double, status_code string")
-    out = span_metrics_exponential(df, ["service"], scale=3).first()
+    out = span_metrics_exponential(df, ["service"]).first()
     assert out["calls"] == 4
     assert out["errors"] == 1
     assert out["zero_count"] == 1
+    s = out["scale"]
     b = out["bucket_counts"]
-    assert b[-1] == 1                       # v=1: ceil(0*8)-1
-    assert b[7] == 1                        # v=2: ceil(1*8)-1 = 2^3-1
-    import math
-    assert b[math.ceil(math.log2(900.0) * 8) - 1] == 1
+    assert b[-1] == 1                       # v=1: ceil(0*2^s)-1
+    assert b[2 ** s - 1] == 1               # v=2: ceil(1*2^s)-1
+    assert b[math.ceil(math.log2(900.0) * 2 ** s) - 1] == 1
     assert abs(out["duration_sum"] - 903.0) < 1e-9
 
 
@@ -101,29 +119,16 @@ def test_span_metrics_exponential_auto_downscale(spark):
     group picks the largest scale whose observed index span fits
     max_size, so wide-range durations collapse to coarser buckets and
     narrow-range groups keep fine resolution."""
-    import math
-
     from opentelemetry_collector_contrib_spark.operators.aggregate import (
         span_metrics_exponential)
-    rows = ([("wide", float(2 ** k), "OK") for k in range(12)]
-            + [("narrow", 100.0 + i, "OK") for i in range(8)])
+    rows = ([("wide", v, "OK") for v in WIDE]
+            + [("narrow", v, "OK") for v in NARROW]
+            + [(None, 5.0, "OK")])   # a NULL dimension keeps its series
     df = spark.createDataFrame(
         rows, "service string, duration_ms double, status_code string")
     out = {r["service"]: r for r in
-           span_metrics_exponential(df, ["service"], max_size=8,
-                                    scale_cap=20).collect()}
-
-    def brute(values, max_size, cap=20):
-        idx = [math.ceil(math.log2(v) * 2 ** cap) - 1 for v in values]
-        h = next(hh for hh in range(cap + 11)  # scale floor is -10
-                 if (max(idx) >> hh) - (min(idx) >> hh) + 1 <= max_size)
-        buckets = {}
-        for i in idx:
-            buckets[i >> h] = buckets.get(i >> h, 0) + 1
-        return cap - h, buckets
-
-    for svc, values in (("wide", [float(2 ** k) for k in range(12)]),
-                        ("narrow", [100.0 + i for i in range(8)])):
+           span_metrics_exponential(df, ["service"], max_size=8).collect()}
+    for svc, values in (("wide", WIDE), ("narrow", NARROW), (None, [5.0])):
         scale, buckets = brute(values, 8)
         assert out[svc]["scale"] == scale, svc
         assert dict(out[svc]["bucket_counts"]) == buckets, svc
@@ -133,7 +138,12 @@ def test_span_metrics_exponential_auto_downscale(spark):
 
 
 def test_signal_to_metrics(spark):
-    spans = _spans(spark).withColumn(
+    expo_rows = spark.createDataFrame(
+        [("t9", f"x{i}", svc, v, "OK")
+         for svc, values in (("wide", WIDE), ("narrow", NARROW),
+                             ("zero", [0.0, -1.0]))
+         for i, v in enumerate(values)], _spans(spark).schema)
+    spans = _spans(spark).unionByName(expo_rows).withColumn(
         "attributes", F.create_map(F.lit("service"), F.col("service")))
     by_service = [{"key": "service"}]
     out = signal_to_metrics_config(spans, [
@@ -144,6 +154,8 @@ def test_signal_to_metrics(spark):
          "sum": {"value": "duration_ms"}},
         {"name": "span.duration.hist", "attributes": by_service,
          "histogram": {"value": "duration_ms", "buckets": [10.0, 100.0]}},
+        {"name": "span.duration.exp", "attributes": by_service,
+         "exponential_histogram": {"value": "duration_ms", "max_size": 8}},
     ]).collect()
     rows = {(r["name"], r["attrs"]["service"]): r for r in out}
     assert rows[("span.count", "svc-a")]["value_int"] == 2
@@ -151,6 +163,19 @@ def test_signal_to_metrics(spark):
     hist = rows[("span.duration.hist", "svc-b")]
     assert hist["bounds"] == [10.0, 100.0]
     assert hist["bucket_counts"] == [0, 1, 1]   # 30 -> le 100, 10000 -> +inf
+    # exponential: the same go-expohisto end state as spanmetrics, as
+    # dense counts from the lowest to the highest used bucket
+    for svc, values in (("wide", WIDE), ("narrow", NARROW)):
+        scale, buckets = brute(values, 8)
+        lo, hi = min(buckets), max(buckets)
+        exp = rows[("span.duration.exp", svc)]
+        assert (exp["scale"], exp["pos_offset"], exp["zero_count"]) \
+            == (scale, lo, 0), svc
+        assert exp["pos_counts"] == [buckets.get(i, 0)
+                                     for i in range(lo, hi + 1)], svc
+    zero = rows[("span.duration.exp", "zero")]   # go-expohisto zero state
+    assert (zero["scale"], zero["zero_count"], zero["pos_offset"],
+            zero["pos_counts"]) == (0, 2, None, [])
     # an empty definition list is a config error, raised before any data
     with pytest.raises(ValueError, match="definition list is empty"):
         signal_to_metrics_config(None, [])

@@ -153,36 +153,63 @@ def test_ivf_probe_is_partition_pruned(spark, tmp_path_factory):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_spanmetrics_exponential_two_stage_agg(spark):
-    """Exponential spanmetrics, fixed-scale mode: per-bucket partial
-    aggregation before the dims re-group — no third shuffle, no
-    cartesian anything."""
+def _expo_span_metrics(df):
     from opentelemetry_collector_contrib_spark.operators.aggregate import (
         span_metrics_exponential)
+    return span_metrics_exponential(df, ["service"])
+
+
+def _expo_signal_to_metrics(df):
+    from opentelemetry_collector_contrib_spark.operators.signaltometrics import (
+        signal_to_metrics_config)
+    return signal_to_metrics_config(
+        df.withColumn("attributes",
+                      F.create_map(F.lit("service"), F.col("service"))),
+        [{"name": "span.duration", "attributes": [{"key": "service"}],
+          "exponential_histogram": {"value": "duration_ms"}}])
+
+
+def _expo_plan(spark, build) -> str:
     df = spark.createDataFrame(
         [("svc", float(i % 50 + 1), "OK") for i in range(100)],
         "service string, duration_ms double, status_code string")
-    plan = _plan(span_metrics_exponential(df, ["service"], scale=3))
-    import re
-    assert len(re.findall(r"\bExchange \(\d+\)", plan)) <= 2
-    assert plan.count("HashAggregate") >= 2  # partial + final per stage
+    return _plan(build(df))
 
 
-def test_spanmetrics_exponential_auto_downscale_plan(spark):
-    """Auto max_size mode: the per-group shift frame (tiny: one row per
-    dimension set) must come back as a BROADCAST join — never a
+def _assert_expo_plan(plan: str) -> None:
+    """The shared exponential downscale: the per-series shift frame
+    (tiny: one row per series) comes back as a BROADCAST join — never a
     shuffle join against the span frame — and the whole job stays at
-    <= 3 shuffles (min/max pass + two-stage bucket agg)."""
-    from opentelemetry_collector_contrib_spark.operators.aggregate import (
-        span_metrics_exponential)
-    df = spark.createDataFrame(
-        [("svc", float(i % 50 + 1), "OK") for i in range(100)],
-        "service string, duration_ms double, status_code string")
-    plan = _plan(span_metrics_exponential(df, ["service"]))
+    <= 3 shuffles (min/max pass + two-stage bucket agg), each
+    aggregation partial + final."""
     import re
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert len(re.findall(r"\bExchange \(\d+\)", plan)) <= 3
+    assert len(re.findall(r"HashAggregate \(\d+\)", plan)) >= 6
+    assert "SortAggregate" not in plan
+
+
+def test_spanmetrics_exponential_two_stage_agg(spark):
+    """Exponential spanmetrics: per-bucket partial aggregation before
+    the dims re-group — partial + final HashAggregate per stage, no
+    sort-based aggregation, no shuffle beyond the downscale's three."""
+    import re
+    plan = _expo_plan(spark, _expo_span_metrics)
+    assert len(re.findall(r"\bExchange \(\d+\)", plan)) <= 3
+    assert len(re.findall(r"HashAggregate \(\d+\)", plan)) >= 6
+    assert "SortAggregate" not in plan
+
+
+def test_spanmetrics_exponential_auto_downscale_plan(spark):
+    """Exponential spanmetrics, auto max_size downscale."""
+    _assert_expo_plan(_expo_plan(spark, _expo_span_metrics))
+
+
+def test_signaltometrics_exponential_downscale_plan(spark):
+    """signaltometrics' exponential_histogram runs the same downscale
+    as spanmetrics, so its plan has the same shape."""
+    _assert_expo_plan(_expo_plan(spark, _expo_signal_to_metrics))
 
 
 def test_neardup_verified_no_cartesian(spark):
