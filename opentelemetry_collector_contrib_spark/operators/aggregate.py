@@ -379,7 +379,13 @@ def span_metrics(df: DataFrame, dims: list[str],
             "_keep",
             F.row_number().over(W.orderBy(F.col("_fs"), *dims))
             <= cardinality_limit).drop("_fs")
-        df = df.join(F.broadcast(ranked), on=list(dims), how="left")
+        # null-safe keys, as in expo_downscale: a span whose dim is NULL
+        # still has a ranked series, and a plain equi-join would leave
+        # its _keep NULL
+        skeys = [f"_k{i}" for i in range(len(dims))]
+        on = [F.col(d).eqNullSafe(F.col(sk)) for d, sk in zip(dims, skeys)]
+        df = df.join(F.broadcast(ranked.toDF(*skeys, "_keep")), on=on,
+                     how="left").drop(*skeys)
         df = df.select(
             *[F.when(F.col("_keep"), F.col(d)).alias(d) for d in dims],
             (~F.col("_keep")).alias("otel_metric_overflow"),

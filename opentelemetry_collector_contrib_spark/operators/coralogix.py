@@ -166,6 +166,11 @@ def coralogix_transactions(spans: DataFrame,
         return res[out_cols]
 
     def process(batches):
+        # these closures pickle by value and name no module-level engine
+        # function, so nothing else makes the worker import the package
+        # and its zipimport patch (package __init__)
+        import opentelemetry_collector_contrib_spark  # noqa: F401
+
         # traces are contiguous within a partition; a trace split
         # across Arrow chunks is carried into the next chunk
         carry = None

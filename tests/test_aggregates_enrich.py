@@ -113,6 +113,22 @@ def test_span_metrics_cardinality_limit_overflow(spark):
         span_metrics(df, ["service"], cardinality_limit=2)
 
 
+def test_span_metrics_cardinality_limit_null_dim(spark):
+    """A NULL dimension is a series of its own under the limit: its
+    spans report otel_metric_overflow false, not NULL (the ranked keys
+    join back null-safely)."""
+    from opentelemetry_collector_contrib_spark.operators.aggregate import (
+        span_metrics)
+    df = spark.createDataFrame(
+        [(1, "a", 1.0, "OK"), (2, None, 2.0, "OK"), (3, "b", 3.0, "OK")],
+        "ord long, service string, duration_ms double, status_code string")
+    out = sorted(
+        ((r["service"] or ""), r["otel_metric_overflow"], r["calls"])
+        for r in span_metrics(df, ["service"], cardinality_limit=5,
+                              order_col="ord").collect())
+    assert out == [("", False, 1), ("a", False, 1), ("b", False, 1)]
+
+
 def test_span_metrics_exponential_auto_downscale(spark):
     """VERDICT r3 item 4: default mode mirrors the reference's
     go-expohisto max_size auto-downscale (config.go:23-123) — each
