@@ -588,8 +588,8 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     mid = F.col("event_id")
 
-    # the FAKE codec bytes (encode_fake_media layout: b"FAKE" + kind +
-    # 3×int32-LE + 32-byte payload) built entirely with Column
+    # the FAKE codec bytes (the layout deterministic_fake_decode parses:
+    # b"FAKE" + kind + 3×int32-LE + 32-byte payload) built entirely with Column
     # expressions — hex-assembled then unhex'd, so the query plan is
     # end-to-end distributed (no driver-side materialization)
     def b1(c):  # one byte, lowercase hex

@@ -20,6 +20,28 @@ __version__ = "0.1.0"
 _STAMP = "_otel_spark_zip_stamp"
 
 
+def _interpreter_start_ns() -> int:
+    """A wall-clock time (ns) no later than this interpreter's start, 0
+    where it cannot be shown. It is the start of the oldest process in
+    the chain of parents that run this executable: a fork without exec
+    keeps the executable, so the process that exec'd this interpreter
+    is in that chain (a PySpark worker is forked from its daemon, and
+    inherits the daemon's importers). Linux ``/proc`` only; the boot
+    time is whole seconds rounded down, which only makes it earlier."""
+    try:
+        with open("/proc/stat") as f:
+            boot = next(int(x.split()[1]) for x in f if x.startswith("btime"))
+        exe, pid, ticks = os.readlink("/proc/self/exe"), os.getpid(), None
+        while pid > 0 and os.readlink(f"/proc/{pid}/exe") == exe:
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+            pid, ticks = int(fields[1]), int(fields[19])
+    except (OSError, ValueError, StopIteration):
+        return 0
+    return (boot * 10**9 + ticks * 10**9 // os.sysconf("SC_CLK_TCK")
+            if ticks is not None else 0)
+
+
 def _backport_lazy_zip_invalidation() -> None:
     """Make ``zipimporter.invalidate_caches`` re-read an archive only
     when the file changed since that importer last read it.
@@ -39,14 +61,19 @@ def _backport_lazy_zip_invalidation() -> None:
     package ``__init__`` because a worker imports it when it unpickles
     an engine UDF that names a module-level engine function (a UDF made
     only of closures imports the package itself, as
-    ``operators/coralogix.py`` does). From the worker's next task on, an
-    unchanged archive costs one ``stat``. On 3.12+ it does nothing.
+    ``operators/coralogix.py`` does). From then on an unchanged archive
+    costs one ``stat``: an importer with no stamp yet takes one without
+    a read when its archive's inode last changed (``st_ctime``, which
+    any write or rename moves forward) before this interpreter started,
+    because every read the importer holds happened after that start.
+    On 3.12+ it does nothing.
     """
     if sys.version_info >= (3, 12):
         return
     original = zipimport.zipimporter.invalidate_caches
     if getattr(original, _STAMP, False):  # already installed
         return
+    started_ns = _interpreter_start_ns()
 
     def invalidate_caches(self):
         try:
@@ -55,8 +82,10 @@ def _backport_lazy_zip_invalidation() -> None:
             self.__dict__.pop(_STAMP, None)
             return original(self)
         stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
-        if self.__dict__.get(_STAMP) != stamp:
-            original(self)
+        last = self.__dict__.get(_STAMP)
+        if last != stamp:
+            if last is not None or st.st_ctime_ns >= started_ns:
+                original(self)
             setattr(self, _STAMP, stamp)
 
     setattr(invalidate_caches, _STAMP, True)

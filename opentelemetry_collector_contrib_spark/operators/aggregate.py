@@ -272,7 +272,7 @@ def explicit_bucket(v: Column, bounds: list[float]) -> Column:
 
 
 def expo_downscale(df: DataFrame, keys: list[str], value: Column,
-                   max_size: int) -> DataFrame:
+                   max_size: int | Column) -> DataFrame:
     """go-expohisto's end state, per row: each series (``keys``) starts
     at MAX_SCALE and halves its resolution until the bucket span of its
     positive values fits ``max_size``. Adds the series' shift ``_h``
@@ -285,7 +285,8 @@ def expo_downscale(df: DataFrame, keys: list[str], value: Column,
     map-side-combined min/max of the scale-20 index per series and a
     BROADCAST of that tiny (keys, _h) frame back onto the rows. Callers
     then aggregate per (keys, _h, _bi) and per (keys, _h): no row ever
-    holds more than ``max_size`` buckets.
+    holds more than ``max_size`` buckets. ``max_size`` may be a Column
+    over ``keys``, a limit per series.
     """
     df = df.withColumn("_i", F.when(value > 0, (F.ceil(
         F.log2(value) * F.lit(float(2 ** MAX_SCALE))) - 1).cast("long")))
@@ -299,22 +300,22 @@ def expo_downscale(df: DataFrame, keys: list[str], value: Column,
     span_fits = lambda h: (  # noqa: E731
         F.floor(F.col("_mx") / F.pow(F.lit(2.0), h))
         - F.floor(F.col("_mn") / F.pow(F.lit(2.0), h)) + 1) <= max_size
-    shifts = (df.groupBy(*keys)
+    shifts = (df.filter(F.col("_i").isNotNull()).groupBy(*keys)
               .agg(F.min("_i").alias("_mn"), F.max("_i").alias("_mx"))
-              .select(*keys, F.when(
-                  F.col("_mn").isNull(), F.lit(MAX_SCALE)).otherwise(
-                  F.coalesce(
-                      F.array_min(F.filter(
-                          F.sequence(F.lit(0), F.lit(max_shift)),
-                          span_fits)),
-                      F.lit(max_shift))).alias("_h")))
+              .select(*keys, F.coalesce(
+                  F.array_min(F.filter(
+                      F.sequence(F.lit(0), F.lit(max_shift)), span_fits)),
+                  F.lit(max_shift)).alias("_h")))
     # null-safe keys: a row whose key is NULL still has a series (as in
-    # span_metrics); a plain equi-join would drop it
+    # span_metrics); a plain equi-join would drop it. Only series with
+    # a positive value have a shift row; the others keep scale 0.
     skeys = [f"_k{i}" for i in range(len(keys))]
     on = [F.col(k).eqNullSafe(F.col(sk)) for k, sk in zip(keys, skeys)]
-    bucket = F.floor(F.col("_i") / F.pow(F.lit(2.0), F.col("_h")))
-    return (df.join(F.broadcast(shifts.toDF(*skeys, "_h")), on=on)
-            .withColumn("_bi", bucket.cast("long")).drop("_i", *skeys))
+    shift = F.coalesce(F.col("_h"), F.lit(MAX_SCALE))
+    bucket = F.floor(F.col("_i") / F.pow(F.lit(2.0), shift))
+    return (df.join(F.broadcast(shifts.toDF(*skeys, "_h")), on=on, how="left")
+            .withColumns({"_h": shift, "_bi": bucket.cast("long")})
+            .drop("_i", *skeys))
 
 
 def _span_error(df: DataFrame) -> Column:

@@ -45,15 +45,6 @@ FEATURE_SCHEMA = T.StructType([
 _MAGIC = b"FAKE"
 
 
-def encode_fake_media(media_id: int, kind: str, width: int, height: int,
-                      n_frames: int = 1) -> bytes:
-    kind_b = {"image": 0, "audio": 1, "video": 2}[kind]
-    payload = (np.arange(32, dtype=np.uint8) + (media_id % 199)).tobytes()
-    return (_MAGIC + bytes([kind_b])
-            + int(width).to_bytes(4, "little") + int(height).to_bytes(4, "little")
-            + int(n_frames).to_bytes(4, "little") + payload)
-
-
 def deterministic_fake_decode(content: bytes) -> dict:
     """Stand-in decoder: parses the synthetic header. A real deploy
     swaps in Pillow/librosa/pyav here — same signature, same batch
@@ -100,21 +91,3 @@ def extract_features(df: DataFrame,
 
     return df.select("media_id", "kind", "content").mapInPandas(gen, FEATURE_SCHEMA)
 
-
-def gen_fake_media_pdf(n: int, seed: int = 42) -> pd.DataFrame:
-    """Deterministic synthetic media table for tests."""
-    kinds = ["image", "audio", "video"]
-    rows = []
-    for i in range(n):
-        kind = kinds[i % 3]
-        w, h = 64 + (i % 8) * 16, 64 + (i % 5) * 16
-        nf = 1 if kind != "video" else 30 + (i % 10)
-        rows.append({
-            "media_id": i,
-            "kind": kind,
-            "content": encode_fake_media(i, kind, w, h, nf),
-            "mime": {"image": "image/fake", "audio": "audio/fake",
-                     "video": "video/fake"}[kind],
-            "meta": {"n_frames": str(nf)},
-        })
-    return pd.DataFrame(rows)

@@ -74,27 +74,6 @@ def split_by_sink(df: DataFrame, routes: list[Route],
     return seen
 
 
-def round_robin(n: int) -> Operator:
-    """roundrobin connector (connector/roundrobinconnector/) — pure
-    load-balancing repartition, no semantics."""
-
-    def fn(df: DataFrame) -> DataFrame:
-        return df.repartition(n)
-
-    return Operator("round_robin", fn, {"n": n})
-
-
-def consistent_hash_partition(keys: list[str], n: int) -> Operator:
-    """loadbalancing exporter's consistent-hash fan-out
-    (exporter/loadbalancingexporter/config.go:16-29) — the reference's
-    only shuffle — as an explicit hash repartition."""
-
-    def fn(df: DataFrame) -> DataFrame:
-        return df.repartition(n, *[F.col(k) for k in keys])
-
-    return Operator("consistent_hash_partition", fn, {"keys": keys, "n": n})
-
-
 def failover_write(df, sink_fns: list, logger=None) -> int:
     """failover connector (connector/failoverconnector/): try sinks in
     priority order; first success wins. ``sink_fns`` are callables

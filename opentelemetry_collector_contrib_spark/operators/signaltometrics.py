@@ -9,50 +9,38 @@ buckets, sum += value*count), and exponential histogram (go-expohisto:
 base-2 buckets at the maximal scale <= 20 whose bucket span fits
 max_size, dense counts between the lowest and highest used index).
 
-Spark shape per definition: OTTL conditions/values compile to Column
-expressions (the same DSL the transform processor uses), records
-filter + project, then ONE groupBy on (projected resource, datapoint
-attributes). Explicit histograms share spanmetrics' bucket rule and
-default bounds; exponential histograms share its go-expohisto
-downscale (``aggregate.expo_downscale``: a min/max pass, a broadcast
-shift frame, then a per-bucket partial aggregation at the final
-scale). All definitions union into one long-form frame; nothing
-leaves the JVM.
+Spark shape, the same for any number of definitions: each one
+compiles (OTTL -> Column expressions, the transform processor's DSL)
+into one struct per record, guarded by its conditions and required
+attributes; one ``inline`` emits them, and all definitions share one
+aggregation per (def, resource, attributes), after one per bucket when
+some definition has buckets. Explicit histograms share spanmetrics'
+bucket rule and default bounds, exponential ones its go-expohisto
+downscale (``aggregate.expo_downscale``), one pass for all of them.
+Nothing leaves the JVM.
 
 This is the engine's one signaltometrics implementation: the
-``signaltometrics_config`` DuckDB oracle and the reference's testdata
-goldens (tests/test_golden_signaltometrics) both run against it.
+``signaltometrics_config`` and ``histogram`` DuckDB oracles and the
+reference's testdata goldens (tests/test_golden_signaltometrics) all
+run against it.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from opentelemetry_collector_contrib_spark.functions.ottl_dsl import (
+    any_condition, compile_value)
 from opentelemetry_collector_contrib_spark.operators.aggregate import (
     DEFAULT_SPANMETRICS_BUCKETS_MS, MAX_SCALE, explicit_bucket,
     expo_downscale)
 
 _INT_RE = r"^-?\d+$"
-_ENTRIES = "array<struct<key:string,value:string>>"
-
-
-def _compile_ottl(expr: str) -> Column:
-    from opentelemetry_collector_contrib_spark.functions.ottl_dsl import (
-        compile_value)
-    v = compile_value(expr)
-    return v if isinstance(v, Column) else F.lit(v)
-
-
-def _conditions(conds: list[str] | None) -> Column | None:
-    """The connector ORs a definition's conditions
-    (config/config.go: any condition matching includes the record)."""
-    if not conds:
-        return None
-    from opentelemetry_collector_contrib_spark.functions.ottl_dsl import (
-        any_condition)
-    return any_condition(conds)
-
+_MAP = "map<string,string>"
 
 OUT_SCHEMA = ("name string, description string, unit string, mtype string, "
               "resource map<string,string>, attrs map<string,string>, "
@@ -62,75 +50,63 @@ OUT_SCHEMA = ("name string, description string, unit string, mtype string, "
               "pos_offset int, pos_counts array<long>, "
               "v_min double, v_max double")
 
-
-def _grouped(df: DataFrame, d: dict, identity_attrs: dict | None):
-    """Filter by conditions + required attributes, project the resource
-    (include_resource_attributes + connector identity attrs) and the
-    datapoint attributes as entry-array group keys, and return
-    (df, group_cols); ``_group_maps`` turns the keys back into maps."""
-    cond = _conditions(d.get("conditions"))
-    if cond is not None:
-        df = df.filter(cond)
-    attr_specs = d.get("attributes") or []
-    entries = []
-    for spec in attr_specs:
-        key = spec["key"]
-        v = F.col("attributes")[key]
-        if "default_value" in spec:
-            v = F.coalesce(v, F.lit(str(spec["default_value"])))
-        elif not spec.get("optional"):
-            # records missing a required attribute are skipped
-            # (aggregator.go: attribute fetch failure drops the event);
-            # optional: true keeps the record and just omits the key
-            df = df.filter(v.isNotNull())
-        entries.append(F.struct(F.lit(key).alias("key"), v.alias("value")))
-    dp_attrs = F.array(*entries) if entries else F.array().cast(_ENTRIES)
-
-    res = F.coalesce(F.col("resource"),
-                     F.create_map().cast("map<string,string>")) \
-        if "resource" in df.columns \
-        else F.create_map().cast("map<string,string>")
-    inc = [s["key"] for s in (d.get("include_resource_attributes") or [])]
-    if inc:
-        res = F.map_filter(res, lambda k, _v: k.isin(*inc))
-    if identity_attrs:
-        res = F.map_concat(res, F.create_map(
-            *[F.lit(x) for kv in identity_attrs.items() for x in kv]))
-    df = (df.withColumn("_gres", F.sort_array(F.map_entries(res)))
-          .withColumn("_gattr", dp_attrs))
-    return df, ["_gres", "_gattr"]
+_OUT_FIELDS = [f.split(" ", 1) for f in OUT_SCHEMA.split(", ")]
+_MTYPES = ("sum", "gauge", "histogram", "exponential_histogram")
 
 
-def _group_maps() -> list[Column]:
-    """The resource and datapoint-attribute maps of a group, rebuilt
-    from its keys once per group (an optional attribute a record lacks
-    is a NULL-valued entry in the key and no key in the map)."""
-    return [F.map_from_entries("_gres").alias("resource"),
-            F.map_filter(F.map_from_entries("_gattr"),
-                         lambda _k, v: v.isNotNull()).alias("attrs")]
+def _compile_ottl(expr: str) -> Column:
+    v = compile_value(expr)
+    return v if isinstance(v, Column) else F.lit(v)
 
 
-def _typed_value(df: DataFrame, expr: str):
+def _typed_value(v: Column, type_name: str):
     """-> (value_double, is_int_per_record). The reference types sums/
     gauges by the OTTL value's Go type; the flat model recovers it from
     the compiled Spark type, falling back to shape inference for map
     members (integers render without '.', and grok's :int/:double
     modifiers canonicalize the rendering)."""
-    v = _compile_ottl(expr)
-    dt = df.select(v.alias("_v")).schema[0].dataType.typeName()
-    if dt in ("long", "int", "integer", "short", "byte"):
+    if type_name in ("long", "int", "integer", "short", "byte"):
         return v.cast("double"), F.lit(True)
-    if dt in ("double", "float") or dt.startswith("decimal"):
+    if type_name in ("double", "float") or type_name.startswith("decimal"):
         return v.cast("double"), F.lit(False)
     s = v.cast("string")
     return s.try_cast("double"), s.rlike(_INT_RE)
 
 
-def _null(*names):  # schema padding for the unified long form
-    return [F.lit(None).alias(n) for n in names]
-
-
-_MTYPES = ("sum", "gauge", "histogram", "exponential_histogram")
+def _record(i: int, d: dict, mtype: str, value: Column, type_name: str,
+            order: Column, identity: list[str]) -> Column:
+    """Definition ``i``'s struct for one record: NULL unless one of its
+    OR'd conditions holds (config/config.go) and every required attribute
+    is present (aggregator.go: a failed attribute fetch drops the event;
+    ``optional: true`` keeps it and omits the key). Its group keys are the
+    sorted resource entries (``_res``, cut to include_resource_attributes
+    plus the identity attrs) and the attribute entries."""
+    keep = [any_condition(d["conditions"])] if d.get("conditions") else []
+    entries = []
+    for spec in d.get("attributes") or []:
+        a = F.col("attributes")[spec["key"]]
+        if "default_value" in spec:
+            a = F.coalesce(a, F.lit(str(spec["default_value"])))
+        elif not spec.get("optional"):
+            keep.append(a.isNotNull())
+        entries.append(F.struct(F.lit(spec["key"]).alias("key"),
+                                a.alias("value")))
+    inc = [s["key"] for s in (d.get("include_resource_attributes") or [])]
+    resource = F.filter(F.col("_res"), lambda e: e["key"].isin(*inc, *identity)) \
+        if inc else F.col("_res")
+    if mtype in ("sum", "gauge"):
+        value, is_int = _typed_value(value, type_name)
+        count = F.lit(1).cast("long")
+    else:
+        value, is_int = value.try_cast("double"), F.lit(None).cast("boolean")
+        count = _compile_ottl(d[mtype].get("count", "1")).try_cast("long")
+    row = F.struct(
+        F.lit(i).alias("_d"), resource.alias("_gres"),
+        (F.array(*entries) if entries else F.array().cast(
+            "array<struct<key:string,value:string>>")).alias("_gattr"),
+        value.alias("_v"), is_int.alias("_ii"), count.alias("_c"),
+        order.alias("_o"))
+    return F.when(reduce(Column.__and__, keep), row) if keep else row
 
 
 def signal_to_metrics_config(df: DataFrame, defs: list[dict],
@@ -139,7 +115,7 @@ def signal_to_metrics_config(df: DataFrame, defs: list[dict],
     """Run a signaltometrics definition list over a flat signal frame.
 
     Each def: {name, description?, unit?, attributes?: [{key,
-    default_value?}], include_resource_attributes?: [{key}],
+    default_value?, optional?}], include_resource_attributes?: [{key}],
     conditions?: [ottl...], sum|gauge|histogram|exponential_histogram:
     {value: ottl, count?: ottl, buckets?: [...], max_size?: n}}.
     ``identity_attrs`` are the connector's own service-identity
@@ -151,92 +127,115 @@ def signal_to_metrics_config(df: DataFrame, defs: list[dict],
         # config.go Validate(): at least one definition is required
         raise ValueError("signaltometrics: the metric definition list "
                          "is empty; configure at least one definition")
-    outs = []
-    for d in defs:
-        mtype = next((t for t in _MTYPES if t in d), None)
+    mtypes = [next((t for t in _MTYPES if t in d), None) for d in defs]
+    for d, mtype in zip(defs, mtypes):
         if mtype is None:
             raise ValueError(
                 f"definition {d.get('name')!r} has no metric type "
                 "(sum/gauge/histogram/exponential_histogram)")
         if mtype == "gauge" and order_col is None:
             raise ValueError("gauge needs order_col (last value wins)")
-        cfg = d[mtype]
-        g, gcols = _grouped(df, d, identity_attrs)
-        # the maps come back from the group keys, so no aggregation
-        # buffer holds a map (that would force a sort-based aggregate)
-        base = [F.lit(d["name"]).alias("name"),
-                F.lit(d.get("description", "")).alias("description"),
-                F.lit(d.get("unit", "")).alias("unit"),
-                F.lit(mtype).alias("mtype"), *_group_maps()]
-        if mtype in ("sum", "gauge"):
-            vd, is_int = _typed_value(g, cfg["value"])
-            g = g.withColumn("_vd", vd).withColumn("_ii", is_int) \
-                .filter(F.col("_vd").isNotNull())
-            aggs = ([F.min("_ii"), F.sum("_vd")] if mtype == "sum" else
-                    [F.max_by("_ii", order_col), F.max_by("_vd", order_col)])
-            agg = g.groupBy(*gcols).agg(
-                aggs[0].alias("is_int"), aggs[1].alias("_s"))
-            outs.append(agg.select(
-                *base, "is_int",
-                F.when(F.col("is_int"), F.col("_s").cast("long"))
-                .alias("value_int"),
-                F.when(~F.col("is_int"), F.col("_s")).alias("value_double"),
-                *_null("count", "total", "bounds", "bucket_counts", "scale",
-                       "zero_count", "pos_offset", "pos_counts",
-                       "v_min", "v_max")))
-            continue
-        v = _compile_ottl(cfg["value"]).try_cast("double")
-        cnt = _compile_ottl(cfg.get("count", "1")).try_cast("long")
-        g = (g.withColumn("_v", v).withColumn("_c", cnt)
-             .filter(F.col("_v").isNotNull() & F.col("_c").isNotNull()))
-        if mtype == "histogram":
+    cfgs = [d[t] for d, t in zip(defs, mtypes)]
+    values = [_compile_ottl(c["value"]) for c in cfgs]
+    # one analysis types every definition's value expression
+    types = [f.dataType.typeName() for f in df.select(
+        *[v.alias(f"_v{i}") for i, v in enumerate(values)]).schema]
+    resource = F.coalesce(F.col("resource"), F.create_map().cast(_MAP)) \
+        if "resource" in df.columns else F.create_map().cast(_MAP)
+    if identity_attrs:
+        resource = F.map_concat(resource, F.create_map(
+            *[F.lit(x) for kv in identity_attrs.items() for x in kv]))
+    order = F.col(order_col) if order_col else F.lit(None).cast("long")
+    records = F.inline(F.array(*[
+        _record(i, d, t, v, n, order, list(identity_attrs or {}))
+        for i, (d, t, v, n) in enumerate(zip(defs, mtypes, values, types))]))
+    # the sorted resource entries are bound once per record (every
+    # definition's key derives from them); a record whose guard failed
+    # inlines as an all-NULL row
+    rows = df.withColumn("_res", F.sort_array(F.map_entries(resource))) \
+        .select(records).filter(
+        F.col("_v").isNotNull() & F.col("_c").isNotNull())
+    d_ = F.col("_d")
+
+    def of(*kinds: str) -> Column:
+        return d_.isin(*[i for i, t in enumerate(mtypes) if t in kinds])
+
+    def pick(literals: list, dtype=None) -> Column:  # one array literal
+        return F.element_at(F.lit(np.array(literals, dtype)), d_ + 1)
+
+    expo = "exponential_histogram" in mtypes
+    bucketed = expo or "histogram" in mtypes
+    series = ["_d", "_gres", "_gattr"]
+    bucket, bounds = F.lit(None).cast("long"), F.lit(None).cast("array<double>")
+    if expo:
+        # a series' shift needs its whole index range before any of its
+        # rows can be bucketed, so it is its own (min/max + broadcast)
+        # pass, one for every exponential definition
+        rows = expo_downscale(
+            rows, series, F.when(of("exponential_histogram"), F.col("_v")),
+            pick([int(c.get("max_size", 160)) for c in cfgs], np.int32))
+        series, bucket = [*series, "_h"], F.col("_bi")
+    for i, (t, c) in enumerate(zip(mtypes, cfgs)):
+        if t == "histogram":
             # config.go:37: spanmetrics-style default bounds
-            bounds = [float(b) for b in cfg.get("buckets") or
-                      DEFAULT_SPANMETRICS_BUCKETS_MS]
-            g = g.withColumn("_bi", explicit_bucket(F.col("_v"), bounds))
-            agg = g.groupBy(*gcols).agg(
-                F.sum("_c").alias("count"),
-                F.sum(F.col("_v") * F.col("_c")).alias("total"),
-                *[F.sum(F.when(F.col("_bi") == i, F.col("_c"))
-                        .otherwise(F.lit(0))).alias(f"_b{i}")
-                  for i in range(len(bounds) + 1)])
-            outs.append(agg.select(
-                *base, *_null("is_int", "value_int", "value_double"),
-                "count", "total",
-                F.array(*[F.lit(b) for b in bounds]).alias("bounds"),
-                F.array(*[F.col(f"_b{i}") for i in range(len(bounds) + 1)])
-                .alias("bucket_counts"),
-                *_null("scale", "zero_count", "pos_offset", "pos_counts",
-                       "v_min", "v_max")))
-            continue
-        # exponential: go-expohisto's end state per series, then a
-        # per-bucket partial aggregation at the final scale, so each
-        # series collects at most max_size buckets
-        g = expo_downscale(g, gcols, F.col("_v"), int(cfg.get("max_size", 160)))
-        per_bucket = g.groupBy(*gcols, "_h", "_bi").agg(
-            F.sum("_c").alias("_n"),
-            F.sum(F.col("_v") * F.col("_c")).alias("_t"),
-            F.min("_v").alias("_mnv"), F.max("_v").alias("_mxv"))
-        agg = per_bucket.groupBy(*gcols, "_h").agg(
-            F.sum("_n").alias("count"), F.sum("_t").alias("total"),
-            F.min("_mnv").alias("v_min"), F.max("_mxv").alias("v_max"),
-            F.sum(F.when(F.col("_bi").isNull(), F.col("_n"))
-                  .otherwise(F.lit(0))).alias("zero_count"),
-            F.min("_bi").alias("_off"), F.max("_bi").alias("_hi"),
-            F.map_from_entries(F.collect_list(F.when(
-                F.col("_bi").isNotNull(), F.struct("_bi", "_n")))).alias("_bm"))
-        # dense counts between the lowest and highest used index
-        # (exphistogram.go copyBucketRange over the logical range)
-        dense = F.transform(F.sequence("_off", "_hi"), lambda i: F.coalesce(
-            F.col("_bm")[i], F.lit(0).cast("long")))
-        outs.append(agg.select(
-            *base, *_null("is_int", "value_int", "value_double"),
-            "count", "total", *_null("bounds", "bucket_counts"),
-            (F.lit(MAX_SCALE) - F.col("_h")).cast("int").alias("scale"),
-            "zero_count", F.col("_off").cast("int").alias("pos_offset"),
-            F.coalesce(dense, F.array().cast("array<long>")).alias("pos_counts"),
-            "v_min", "v_max"))
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+            b = [float(x) for x in c.get("buckets") or DEFAULT_SPANMETRICS_BUCKETS_MS]
+            bucket = F.when(d_ == i, explicit_bucket(F.col("_v"), b)).otherwise(bucket)
+            bounds = F.when(d_ == i, F.lit(np.array(b))).otherwise(bounds)
+
+    # per (series, bucket) when some definition has buckets, then per
+    # series; gauges carry their order through both levels (last value
+    # wins). The maps come back from the group keys, so no aggregation
+    # buffer holds a map (that would force a sort-based aggregate).
+    agg = rows.withColumn("_bi", bucket).groupBy(
+        *series, *(["_bi"] if bucketed else [])).agg(
+        F.sum("_c").alias("_n"),
+        F.sum(F.col("_v") * F.col("_c")).alias("_t"),
+        F.min("_v").alias("_mn"), F.max("_v").alias("_mx"),
+        F.min("_ii").alias("_ii"), F.max_by("_v", "_o").alias("_gv"),
+        F.max_by("_ii", "_o").alias("_gi"), F.max("_o").alias("_o"))
+    out = {
+        "name": pick([d["name"] for d in defs]),
+        "description": pick([d.get("description", "") for d in defs]),
+        "unit": pick([d.get("unit", "") for d in defs]),
+        "mtype": pick(mtypes),
+        "resource": F.map_from_entries("_gres"),
+        "attrs": F.map_filter(F.map_from_entries("_gattr"),
+                              lambda _k, v: v.isNotNull())}
+    if "sum" in mtypes or "gauge" in mtypes:
+        is_int = F.when(of("sum"), F.col("_ii")).when(of("gauge"), F.col("_gi"))
+        value = F.when(of("sum"), F.col("_t")).when(of("gauge"), F.col("_gv"))
+        out.update(is_int=is_int, value_int=F.when(is_int, value.cast("long")),
+                   value_double=F.when(~is_int, value))
+    if bucketed:
+        bi, n = F.col("_bi"), F.col("_n")
+        agg = agg.groupBy(*series).agg(
+            F.sum(n).alias("_n"), F.sum("_t").alias("_t"),
+            F.min("_mn").alias("_mn"), F.max("_mx").alias("_mx"),
+            F.min("_ii").alias("_ii"), F.max_by("_gv", "_o").alias("_gv"),
+            F.max_by("_gi", "_o").alias("_gi"),
+            F.sum(F.when(bi.isNull(), n).otherwise(F.lit(0))).alias("_z"),
+            F.min(bi).alias("_lo"), F.max(bi).alias("_hi"),
+            F.map_from_entries(F.collect_list(
+                F.when(bi.isNotNull(), F.struct(bi, n)))).alias("_bm"))
+        # dense counts: every explicit bucket, or the exponential range
+        # between the lowest and highest used index (copyBucketRange)
+        is_hist = of("histogram")
+        dense = F.transform(F.sequence(
+            F.when(is_hist, F.lit(0).cast("long")).otherwise(F.col("_lo")),
+            F.when(is_hist, F.size(bounds).cast("long"))
+            .otherwise(F.col("_hi"))),
+            lambda i: F.coalesce(F.col("_bm")[i], F.lit(0).cast("long")))
+        counted = of("histogram", "exponential_histogram")
+        out.update(count=F.when(counted, n), total=F.when(counted, F.col("_t")),
+                   bounds=bounds, bucket_counts=F.when(is_hist, dense))
+    if expo:
+        is_expo = of("exponential_histogram")
+        out.update({name: F.when(is_expo, c) for name, c in (
+            ("scale", (F.lit(MAX_SCALE) - F.col("_h")).cast("int")),
+            ("zero_count", F.col("_z")),
+            ("pos_offset", F.col("_lo").cast("int")),
+            ("pos_counts", F.coalesce(dense, F.array().cast("array<long>"))),
+            ("v_min", F.col("_mn")), ("v_max", F.col("_mx")))})
+    return agg.select(*[out[name].alias(name) if name in out
+                        else F.lit(None).cast(dtype).alias(name)
+                        for name, dtype in _OUT_FIELDS])

@@ -1,4 +1,4 @@
-"""Skew handling: salting + two-phase aggregation, hot-key isolation.
+"""Skew handling: salting + two-phase aggregation.
 
 The pages table's hosts are Zipf-distributed (a few very hot hosts —
 FIXTURES.md F1); a plain ``groupBy(host)`` sends every hot-host row to
@@ -18,7 +18,7 @@ non-algebraic ones (exact distinct) need the hash-partial pattern in
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -66,18 +66,3 @@ def salted_count_distinct(df: DataFrame, keys: list[str], value: str,
                .agg(F.count_distinct(F.col(value)).alias("_pd")))
     return partial.groupBy(*keys).agg(F.sum("_pd").alias(f"distinct_{value}"))
 
-
-def isolate_hot_keys(df: DataFrame, key: str, threshold_frac: float = 0.01,
-                     sample_frac: float = 0.05, seed: int = 42) -> tuple[DataFrame, list]:
-    """Split a frame into (cold, hot_keys): hot keys found by sampling.
-
-    The standard prelude to differential treatment — broadcast the hot
-    subset, shuffle the cold one. Sampling keeps detection O(sample).
-    """
-    sample = df.sample(fraction=sample_frac, seed=seed)
-    total = sample.count() or 1
-    hot = [r[key] for r in
-           (sample.groupBy(key).count()
-            .filter(F.col("count") > total * threshold_frac)
-            .collect())]
-    return df, hot

@@ -1,6 +1,8 @@
 """Dedup family (exact / minhash-LSH / simhash / n-gram Jaccard /
 embedding near-dup), similarity search, text stats, multimodal stubs."""
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -318,13 +320,36 @@ def test_lang_id_and_profile(spark, docs):
     assert 0.0 <= prof[0]["quality"] <= 1.0
 
 
+def _fake_media(media_id: int, kind: str, width: int, height: int,
+                n_frames: int) -> bytes:
+    """Bytes in the layout ``multimodal.deterministic_fake_decode``
+    parses: b"FAKE" + kind byte + width, height, n_frames (int32 LE) +
+    a 32-byte payload."""
+    payload = (np.arange(32, dtype=np.uint8) + (media_id % 199)).tobytes()
+    return (b"FAKE" + bytes([["image", "audio", "video"].index(kind)])
+            + width.to_bytes(4, "little") + height.to_bytes(4, "little")
+            + n_frames.to_bytes(4, "little") + payload)
+
+
+def _fake_media_pdf(n: int) -> pd.DataFrame:
+    """Deterministic synthetic media table."""
+    rows = []
+    for i in range(n):
+        kind = ["image", "audio", "video"][i % 3]
+        w, h = 64 + (i % 8) * 16, 64 + (i % 5) * 16
+        nf = 1 if kind != "video" else 30 + (i % 10)
+        rows.append({"media_id": i, "kind": kind,
+                     "content": _fake_media(i, kind, w, h, nf),
+                     "mime": f"{kind}/fake", "meta": {"n_frames": str(nf)}})
+    return pd.DataFrame(rows)
+
+
 def test_multimodal_decode_plumbing(spark):
     from opentelemetry_collector_contrib_spark.operators.multimodal import (
         MEDIA_SCHEMA,
         extract_features,
-        gen_fake_media_pdf,
     )
-    pdf = gen_fake_media_pdf(30)
+    pdf = _fake_media_pdf(30)
     df = spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
     feats = extract_features(df)
     rows = {r["media_id"]: r for r in feats.collect()}

@@ -47,13 +47,9 @@ TEST_ONLY_NAMES = {f"{PKG}.{name}": reason for name, reason in {
     "operators.metrics_state.metrics_transform": "item 5",
     "operators.metrics_state.delta_to_cumulative_pdata": "item 5",
     "operators.metrics_state.delta_to_cumulative_expo": "item 5",
-    "operators.multimodal.gen_fake_media_pdf": "item 5",
     "operators.routing.split_by_sink": "item 5",
-    "operators.routing.round_robin": "item 5",
-    "operators.routing.consistent_hash_partition": "item 5",
     "operators.routing.failover_write": "item 5",
     "operators.skew.salted_count_distinct": "item 5",
-    "operators.skew.isolate_hot_keys": "item 5",
     "operators.textstats.text_profile": "item 5",
     "sources.awslogs.parse_elb_access_logs": "item 5 (decoders)",
     "sources.awslogs.parse_subscription_filter_logs": "item 5 (decoders)",

@@ -355,3 +355,56 @@ def test_tailsampling_policies_single_shuffle(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert len(re.findall(r"\bExchange \(\d+\)", plan)) <= 2
+
+
+@pytest.fixture(scope="module")
+def signals_parquet(spark, tmp_path_factory):
+    p = str(tmp_path_factory.mktemp("pq") / "signals")
+    spark.range(0, 400, numPartitions=4).select(
+        F.col("id").alias("ord"), (F.col("id") % 37 * 1.5).alias("value"),
+        F.create_map(F.lit("k"), (F.col("id") % 3).cast("string"))
+        .alias("attributes"),
+        F.create_map(F.lit("host"), (F.col("id") % 2).cast("string"))
+        .alias("resource")).write.parquet(p)
+    return p
+
+
+_DEFS = {
+    "sum": {"name": "s", "attributes": [{"key": "k"}], "sum": {"value": "value"}},
+    "gauge": {"name": "g", "attributes": [{"key": "k"}],
+              "gauge": {"value": "value"}},
+    "hist": {"name": "h", "histogram": {"value": "value"}},
+    "sum_if": {"name": "s2", "conditions": ['attributes["k"] == "1"'],
+               "sum": {"value": "1"}},
+    "hist_k": {"name": "h2", "attributes": [{"key": "k"}],
+               "histogram": {"value": "value", "buckets": [5.0, 20.0]}},
+    **{f"expo{i}": {"name": f"e{i}", "attributes": [{"key": "k"}][:i % 2],
+                    "exponential_histogram": {"value": "value", "max_size": 4 + i}}
+       for i in range(3)},
+}
+
+
+def _shape(spark, path, names):
+    import re
+    from opentelemetry_collector_contrib_spark.operators.signaltometrics import (
+        signal_to_metrics_config)
+    plan = _plan(signal_to_metrics_config(
+        spark.read.parquet(path), [_DEFS[n] for n in names],
+        identity_attrs={"svc": "stm"}, order_col="ord"))
+    assert "SortAggregate" not in plan
+    return (len(re.findall(r"\bScan parquet\s*\(\d+\)", plan)),
+            len(re.findall(r"\bExchange \(\d+\)", plan)))
+
+
+def test_signaltometrics_plan_does_not_grow_with_definitions(spark, signals_parquet):
+    """Every definition shares one scan and one grouping: the plan's
+    scans and shuffles depend on whether some definition has buckets
+    (a per-bucket level first) or is exponential (the shift pass), never
+    on how many definitions there are."""
+    shape = lambda *names: _shape(spark, signals_parquet, names)  # noqa: E731
+    assert shape("sum") == shape("sum", "gauge") == (1, 1)
+    assert shape("hist") == shape("sum", "gauge", "hist", "sum_if", "hist_k") \
+        == (1, 2)
+    five = ("sum", "gauge", "hist", "sum_if", "hist_k")
+    assert shape(*five, "expo0") == shape(*five, "expo0", "expo1", "expo2") \
+        == (2, 3)

@@ -3,7 +3,6 @@
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.operators.skew import (
-    isolate_hot_keys,
     salted_agg,
     salted_count_distinct,
 )
@@ -38,12 +37,6 @@ def test_salted_count_distinct_exact(spark):
     got = {r["k"]: r["distinct_v"] for r in
            salted_count_distinct(df, ["k"], "v", buckets=8).collect()}
     assert got == exact
-
-
-def test_isolate_hot_keys(spark):
-    df = _skewed(spark)
-    _, hot = isolate_hot_keys(df, "k", threshold_frac=0.3, sample_frac=0.5)
-    assert hot == ["hot"]
 
 
 def test_read_text_lines(spark, tmp_path):

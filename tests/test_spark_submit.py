@@ -34,3 +34,25 @@ def test_spark_submit_py_files_zip_only(tmp_path):
     assert counters["refused"] == 439
     assert counters["sent"] == {"sink_errors": 1186, "sink_en_get": 5299,
                                 "sink_api": 3257, "sink_default": 10258}
+
+
+def test_workers_get_the_package_root_on_their_path(spark):
+    """get_spark hands Python workers the directory that holds the
+    package, so an engine UDF unpickles whatever the driver's working
+    directory is (under --py-files that directory is the zip)."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
+
+    import opentelemetry_collector_contrib_spark as pkg
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
+
+    @pandas_udf("string")
+    def worker_path(s: pd.Series) -> pd.Series:
+        return pd.Series([os.environ.get("PYTHONPATH", "")] * len(s))
+
+    paths = {r[0] for r in spark.range(4).select(worker_path(F.col("id")))
+             .distinct().collect()}
+    assert spark.conf.get("spark.executorEnv.PYTHONPATH") == root
+    assert paths and all(root in p.split(os.pathsep) for p in paths)

@@ -4,6 +4,7 @@ an unchanged archive is not re-read, a rewritten one is, and Python
 3.12+ keeps the stdlib method. The last test checks that pandas-UDF
 workers running an engine UDF have it installed."""
 
+import glob
 import importlib
 import os
 import sys
@@ -11,6 +12,7 @@ import zipfile
 import zipimport
 
 import pandas as pd
+import pyspark
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -47,12 +49,12 @@ def _import(names, name):
     return importlib.import_module(name)
 
 
-def _count_reads(monkeypatch, archive) -> list:
+def _count_reads(monkeypatch, *archives) -> list:
     reads = []
     real = zipimport._read_directory
 
     def counting(path):
-        if path == archive:
+        if path in archives:
             reads.append(path)
         return real(path)
 
@@ -72,6 +74,27 @@ def test_unchanged_archive_is_not_reread(zip_on_path, monkeypatch):
         importlib.invalidate_caches()
     assert reads == []
     assert isinstance(sys.path_importer_cache[archive], zipimport.zipimporter)
+
+
+@pytest.mark.skipif(not BACKPORTED, reason="stdlib invalidation is lazy")
+def test_first_invalidation_reads_only_archives_newer_than_the_interpreter(
+        zip_on_path, monkeypatch):
+    """An importer's first invalidation after the patch is installed
+    (a worker's second task) stamps an archive that last changed before
+    the interpreter started without reading it: every read the importer
+    holds came later. An archive written since is read once."""
+    older = min(glob.glob(os.path.join(
+        os.path.dirname(pyspark.__file__), "python", "lib", "*.zip")))
+    archive, names = zip_on_path
+    _write_zip(archive, {"zi_fresh": "X = 1\n"})
+    importers = [zipimport.zipimporter(older), zipimport.zipimporter(archive)]
+    reads = _count_reads(monkeypatch, older, archive)
+    for importer in importers:
+        importer.invalidate_caches()
+    assert reads == [archive]
+    for importer in importers:
+        importer.invalidate_caches()
+    assert reads == [archive]
 
 
 def test_rewritten_archive_is_reread(zip_on_path):
