@@ -36,6 +36,34 @@ def test_spark_submit_py_files_zip_only(tmp_path):
                                 "sink_api": 3257, "sink_default": 10258}
 
 
+MASTER_JOB = """
+import json, sys
+from opentelemetry_collector_contrib_spark.session import get_spark
+spark = get_spark()
+conf = spark.sparkContext.getConf()
+with open(sys.argv[1], "w") as f:
+    json.dump({"master": spark.sparkContext.master,
+               "memory": conf.get("spark.driver.memory")}, f)
+spark.stop()
+"""
+
+
+@pytest.mark.skipif(SPARK_SUBMIT is None, reason="no spark-submit on PATH")
+def test_spark_submit_master_and_driver_memory_stand(tmp_path):
+    """Under spark-submit the JVM is already up: get_spark() sets no
+    master or driver memory of its own, so the submitted ones stand."""
+    job = tmp_path / "job.py"
+    job.write_text(MASTER_JOB)
+    out = str(tmp_path / "out.json")
+    res = subprocess.run(
+        [SPARK_SUBMIT, "--master", "local[3]", "--driver-memory", "1g", str(job), out],
+        cwd=str(tmp_path), env=dict(os.environ, PYTHONPATH=REPO),
+        capture_output=True, text=True, timeout=600)
+    assert res.returncode == 0, res.stderr[-2000:]
+    with open(out) as f:
+        assert json.load(f) == {"master": "local[3]", "memory": "1g"}
+
+
 def test_workers_get_the_package_root_on_their_path(spark):
     """get_spark hands Python workers the directory that holds the
     package, so an engine UDF unpickles whatever the driver's working
