@@ -634,7 +634,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster assignment: MinHash-LSH pair edges ->
-    connected components (iterative min-label propagation) -> each
+    connected components (large-star/small-star rounds) -> each
     clustered doc labeled with its component's min doc_id. The oracle
     computes the same closure with a recursive CTE."""
     from opentelemetry_collector_contrib_spark.operators.dedup import (
@@ -643,19 +643,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh_pairs(docs, threshold=0.3, hash_fn="md5") \
         .select("id_a", "id_b")
     return connected_components(pairs).select(
-        F.col("node").alias("doc_id"), F.col("cluster"))
-
-
-def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same duplicate-cluster closure as q_dedup_clusters but via
-    alternating large-star/small-star rounds (O(log n) rounds vs
-    component diameter) — identical output, same recursive-CTE oracle."""
-    from opentelemetry_collector_contrib_spark.operators.dedup import (
-        connected_components_two_phase, minhash_lsh_pairs)
-    docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, threshold=0.3, hash_fn="md5") \
-        .select("id_a", "id_b")
-    return connected_components_two_phase(pairs).select(
         F.col("node").alias("doc_id"), F.col("cluster"))
 
 
@@ -2537,7 +2524,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "count_default_attr": q_count_default_attr,
         "count_multiple_conditions": q_count_multiple_conditions,
         "corpus_curation": q_corpus_curation,
-        "dedup_clusters_star": q_dedup_clusters_star,
         "minhash_lsh": q_minhash_lsh,
         "spanmetrics": q_spanmetrics,
         "spanmetrics_exp": q_spanmetrics_exp,
@@ -4480,9 +4466,6 @@ def oracle_sql() -> dict[str, str]:
               WHERE l_quantity > 49 OR l_returnflag = 'R')
         """,
     }
-    # the two-phase (large-star/small-star) variant computes the same
-    # transitive closure — byte-identical oracle
-    d["dedup_clusters_star"] = d["dedup_clusters"]
     # composed curation DAG: replay quality -> exact -> near-dup stages
     d["corpus_curation"] = f"""
         WITH RECURSIVE w AS (

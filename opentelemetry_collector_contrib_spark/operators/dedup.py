@@ -289,33 +289,6 @@ def with_simhash(df: DataFrame, text_col: str, out_col: str = "simhash",
     return df.withColumn(out_col, out).drop("_toks", "_hashes", "_acc")
 
 
-def simhash_dedup(df: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", hamming_threshold: int = 3,
-                  band_bits: int = 16) -> DataFrame:
-    """SimHash near-dup pairs: bucket on 4 x 16-bit bands (a pair within
-    hamming distance 3 shares at least one band), join per band,
-    verify hamming distance natively (bit_count of xor)."""
-    sigd = with_simhash(df.select(id_col, text_col), text_col, "_sh") \
-        .select(id_col, "_sh")
-    n_bands = 64 // band_bits
-    mask = (1 << band_bits) - 1
-    banded = sigd.select(
-        id_col, "_sh",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.shiftright(F.col("_sh"), b * band_bits).bitwiseAND(F.lit(mask)).alias("bucket"))
-            for b in range(n_bands)])).alias("bb"),
-    ).select(id_col, "_sh", "bb.band", "bb.bucket")
-    a = banded.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sh_a"), "band", "bucket")
-    b = banded.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sh_b"), "band", "bucket")
-    pairs = (a.join(b, on=["band", "bucket"]).filter(F.col("id_a") < F.col("id_b"))
-             .select("id_a", "id_b", "_sh_a", "_sh_b").distinct())
-    hamming = F.bit_count(F.col("_sh_a").bitwiseXOR(F.col("_sh_b")))
-    return (pairs.withColumn("hamming", hamming)
-            .filter(F.col("hamming") <= hamming_threshold)
-            .select("id_a", "id_b", "hamming"))
-
-
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", ngram: int = 3,
                         threshold: float = 0.8,
@@ -371,117 +344,70 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
             .select("id_a", "id_b", "jaccard"))
 
 
+# Alternating large-star/small-star rounds reach their fixpoint in
+# O(log^2 n) rounds (Kiveris et al.), about log2 n in practice: a run
+# still moving after this many is a fault, never a partial result.
+_MAX_STAR_ROUNDS = 100
+
+
 def connected_components(pairs: DataFrame, src: str = "id_a",
-                         dst: str = "id_b",
-                         max_iter: int = 25) -> DataFrame:
+                         dst: str = "id_b") -> DataFrame:
     """Duplicate-cluster transitive closure: connected components over
-    near-dup pair edges by iterative min-label propagation.
+    near-dup pair edges by alternating large-star / small-star rounds
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SOCC'14 — public algorithm). Rounds grow with log n, not with the
+    component DIAMETER, so chained dup clusters (A≈B≈C≈... across a
+    mirrored corpus) stay cheap.
 
-    Each node starts labeled with itself; every round each node takes
-    the min of its own label and its neighbors' labels; convergence in
-    <= graph-diameter rounds (dup clusters are shallow — a handful of
-    rounds in practice; ``max_iter`` bounds pathological chains).
-    Output: (node, cluster) where cluster = min node id of the
-    component — the canonical representative used for "keep one doc
-    per duplicate cluster".
-
-    Scale shape (10^12 edges): each round is one shuffle-join of the
-    label frame against the symmetrized edge list plus a groupBy-min
-    (the labels frame stays (node, cluster), narrow). Convergence is
-    checked with a cheap changed-row count per round; caching the
-    label frame between rounds keeps lineage bounded. Needs diameter
-    rounds — for chain-y duplicate graphs use
-    ``connected_components_two_phase`` (O(log n) rounds).
-    """
-    sym = (pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-           .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v"))))
-    # materialize the edge list ONCE: every round joins against it, and
-    # without the checkpoint each round re-evaluates the (possibly
-    # expensive) pair-generation lineage feeding `pairs`
-    sym = sym.localCheckpoint(eager=True)
-    labels = (sym.select(F.col("u").alias("node")).distinct()
-              .withColumn("cluster", F.col("node")))
-    labels = labels.localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        neighbor_min = (sym.join(labels, sym.v == labels.node)
-                        .groupBy("u").agg(F.min("cluster").alias("nmin")))
-        new_labels = (labels.join(neighbor_min,
-                                  labels.node == neighbor_min.u, "left")
-                      .select(F.col("node"),
-                              F.least(F.col("cluster"),
-                                      F.coalesce(F.col("nmin"),
-                                                 F.col("cluster")))
-                              .alias("cluster")))
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), on="node")
-                   .filter(F.col("n.cluster") != F.col("o.cluster"))
-                   .count())
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select("node", "cluster")
-
-
-def connected_components_two_phase(pairs: DataFrame, src: str = "id_a",
-                                   dst: str = "id_b",
-                                   max_iter: int = 20) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SOCC'14 — public algorithm): converges in O(log n) rounds
-    regardless of component DIAMETER, where min-label propagation
-    (``connected_components``) needs diameter rounds — the scale path
-    when dup clusters chain (A≈B≈C≈... across a mirrored corpus).
+    Output: (node, cluster) for every non-NULL endpoint, where cluster
+    = the component's min id — the canonical representative used for
+    "keep one doc per duplicate cluster". NULL is not a node: an id
+    whose only partner is NULL, like an id with only a self-loop, is
+    its own cluster.
 
     large-star: every node links its larger neighbors to the min of
     its neighborhood (incl. itself). small-star: every node links its
     smaller-or-equal neighbors to their min. Both are one groupBy-min
-    plus one join over the edge frame per round, and the edge frame
-    monotonically flattens into stars; fixpoint is detected with a
-    cheap count+hash signature action per round. Same output contract
-    as ``connected_components``: (node, cluster = component min id).
+    plus one join over the edge frame per round; every round's edges
+    point from a larger to a smaller id and keep the components. The
+    loop stops at the fixpoint, a star forest (each member has one
+    edge, to a root that has none), so each root is its component's
+    min and the labels are exact.
 
-    Non-numeric ids (string doc hashes, URLs — e.g. whatever id_col a
-    caller hands curate_corpus) are supported via a dictionary lane:
-    ids are hashed to longs (the star rounds only need SOME total
-    order), and the final labels are joined back to the originals with
-    a per-component min-original relabel, so ``cluster`` is still the
-    component's min id in the ORIGINAL type's ordering. The hash lane
-    shares exact_dedup's documented 64-bit birthday tradeoff
-    (~n^2/2^65 collision odds would merge two components); for a
-    collision-proof run on opaque ids use ``connected_components``.
+    Integer ids are cast to long. Other ids (string doc hashes, URLs —
+    whatever id_col a caller hands curate_corpus) take a dictionary
+    lane: each distinct id gets a unique long that grows with the id,
+    so the component min maps back to the min original id, with no
+    hash collisions.
     """
-    int_types = {"tinyint", "smallint", "int", "bigint"}
-    dtypes = dict(pairs.select(src, dst).dtypes)
-    numeric_ids = dtypes[src] in int_types and dtypes[dst] in int_types
-
-    def _h(c):  # deterministic id -> long (dictionary lane)
-        return F.xxhash64(F.col(c).cast("string"))
-
     # materialize the input edges ONCE (the pair-generation lineage —
     # e.g. a full MinHash chain — must not replay per round/action)
-    if numeric_ids:
+    raw = (pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+           .localCheckpoint(eager=True))
+    ends = (raw.select(F.col("a").alias("orig"))
+            .union(raw.select(F.col("b").alias("orig")))
+            .filter(F.col("orig").isNotNull()).distinct())
+    if all(t in {"tinyint", "smallint", "int", "bigint"}
+           for _, t in raw.dtypes):
         dic = None
-        edges = (pairs.select(F.col(src).cast("long").alias("u"),
-                              F.col(dst).cast("long").alias("v"))
-                 .filter(F.col("u") != F.col("v")).distinct()
-                 .localCheckpoint(eager=True))
+        nodes = ends.select(F.col("orig").cast("long").alias("node"))
+        edges = raw.select(F.col("a").cast("long").alias("u"),
+                           F.col("b").cast("long").alias("v"))
     else:
-        dic = (pairs.select(F.col(src).alias("orig"))
-               .union(pairs.select(F.col(dst).alias("orig"))).distinct()
-               .select("orig", _h("orig").alias("h"))
+        # monotonically_increasing_id over a sorted frame grows with
+        # the sort key; the checkpoint fixes the ids, which a re-run
+        # of the sort could partition differently
+        dic = (ends.orderBy("orig")
+               .withColumn("node", F.monotonically_increasing_id())
                .localCheckpoint(eager=True))
-        edges = (pairs.select(_h(src).alias("u"), _h(dst).alias("v"))
-                 .filter(F.col("u") != F.col("v")).distinct()
-                 .localCheckpoint(eager=True))
-    all_nodes = (edges.select(F.col("u").alias("node"))
-                 .union(edges.select(F.col("v").alias("node"))).distinct()
-                 .localCheckpoint(eager=True))
-
-    def signature(e: DataFrame) -> tuple:
-        row = e.agg(F.count(F.lit(1)).alias("c"),
-                    F.bit_xor(F.xxhash64("u", "v")).alias("h")).first()
-        return (row["c"], row["h"])
+        nodes = dic
+        edges = (raw
+                 .join(dic.select(F.col("orig").alias("a"),
+                                  F.col("node").alias("u")), on="a")
+                 .join(dic.select(F.col("orig").alias("b"),
+                                  F.col("node").alias("v")), on="b")
+                 .select("u", "v"))
+    edges = edges.filter(F.col("u") != F.col("v")).distinct()
 
     def large_star(e: DataFrame) -> DataFrame:
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -502,28 +428,33 @@ def connected_components_two_phase(pairs: DataFrame, src: str = "id_a",
         return (linked.union(self_link)
                 .filter(F.col("u") != F.col("v")).distinct())
 
-    sig = signature(edges)
-    for _ in range(max_iter):
+    def is_star_forest(e: DataFrame) -> bool:
+        deg = (e.select("u", F.lit(1).alias("o"), F.lit(0).alias("i"))
+               .union(e.select(F.col("v").alias("u"), F.lit(0).alias("o"),
+                               F.lit(1).alias("i")))
+               .groupBy("u").agg(F.sum("o").alias("o"), F.sum("i").alias("i")))
+        # a member has one out-edge and no in-edge; a root no out-edge
+        return deg.filter((F.col("o") > 1)
+                          | ((F.col("o") > 0) & (F.col("i") > 0))).isEmpty()
+
+    for _ in range(_MAX_STAR_ROUNDS):
         edges = small_star(large_star(edges)).localCheckpoint(eager=True)
-        new_sig = signature(edges)
-        if new_sig == sig:
+        if is_star_forest(edges):
             break
-        sig = new_sig
-    # fixpoint is a star forest: u (member) -> v (component min);
-    # representatives have no outgoing edge and label themselves
-    labels = (all_nodes.join(edges, all_nodes.node == edges.u, "left")
-              .select("node", F.coalesce(F.col("v"), F.col("node"))
-                      .alias("cluster")))
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint in {_MAX_STAR_ROUNDS} rounds")
+    # a star forest: u (member) -> v (component min); roots label
+    # themselves
+    labels = (nodes.join(edges, nodes.node == edges.u, "left")
+              .withColumn("cluster", F.coalesce(F.col("v"), F.col("node"))))
     if dic is None:
-        return labels
-    # dictionary lane: back to original ids, then relabel each hashed
-    # component with its min ORIGINAL id (one groupBy + one join)
-    rel = (labels.join(dic, labels.node == dic.h)
-           .select("orig", "cluster"))
-    mins = rel.groupBy("cluster").agg(F.min("orig").alias("_cmin"))
-    return (rel.join(mins, on="cluster")
+        return labels.select("node", "cluster")
+    return (labels.join(dic.select(F.col("node").alias("cluster"),
+                                   F.col("orig").alias("_corig")),
+                        on="cluster")
             .select(F.col("orig").alias("node"),
-                    F.col("_cmin").alias("cluster")))
+                    F.col("_corig").alias("cluster")))
 
 
 def cosine_sim_expr(a: Column, b: Column) -> Column:

@@ -14,19 +14,6 @@ from pyspark.sql import functions as F
 from opentelemetry_collector_contrib_spark.operators.base import Operator
 
 
-def lookup_join(lookup: DataFrame, on: str | list[str] | Column,
-                how: str = "left", select: list[str] | None = None) -> Operator:
-    """Broadcast left join against a small lookup table — the analog of
-    k8sattributes' informer-map probe
-    (processor/k8sattributesprocessor/processor.go:141-202,320-352)."""
-
-    def fn(df: DataFrame) -> DataFrame:
-        rhs = F.broadcast(lookup.select(*select) if select else lookup)
-        return df.join(rhs, on=on, how=how)
-
-    return Operator("lookup_join", fn, {"how": how})
-
-
 def coalesce_assoc_join(lookup: DataFrame, assoc_keys: list[tuple[str, str]],
                         value_cols: list[str]) -> Operator:
     """N-rule association (k8sattributes pod_association.go:18-60):
@@ -117,17 +104,6 @@ def geoip_join(ip_geo: DataFrame, ip_col: str,
         return joined.drop("_b", "_ip_long", "ip_start", "ip_end")
 
     return Operator("geoip_join", fn, {})
-
-
-def dns_lookup_join(hosts: DataFrame, host_col: str) -> Operator:
-    """dnslookup processor (processor/dnslookupprocessor/) — broadcast
-    join against a resolved host->ip table."""
-
-    def fn(df: DataFrame) -> DataFrame:
-        return df.join(F.broadcast(hosts), on=df[host_col] == hosts["hostname"], how="left") \
-                 .drop("hostname")
-
-    return Operator("dns_lookup_join", fn, {})
 
 
 SERVICE_GRAPH_DEFAULT_BOUNDS = (

@@ -59,21 +59,6 @@ def router(routes: list[Route], default: str = DEFAULT_SINK,
     return Operator("router", fn, {"n_routes": len(routes)})
 
 
-def split_by_sink(df: DataFrame, routes: list[Route],
-                  default: str = DEFAULT_SINK,
-                  tag_col: str = SINK_COL) -> dict[str, DataFrame]:
-    """Materialize the per-sink DataFrames (the connector's per-consumer
-    groups, logs.go:103-106). Caller should ``.cache()`` the tagged
-    frame if consuming more than one sink."""
-    tagged = df.withColumn(tag_col, route_tag_expr(routes, default))
-    sinks = [r.sink for r in routes] + [default]
-    seen: dict[str, DataFrame] = {}
-    for s in sinks:
-        if s not in seen:
-            seen[s] = tagged.filter(F.col(tag_col) == s)
-    return seen
-
-
 def failover_write(df, sink_fns: list, logger=None) -> int:
     """failover connector (connector/failoverconnector/): try sinks in
     priority order; first success wins. ``sink_fns`` are callables

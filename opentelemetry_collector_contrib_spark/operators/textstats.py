@@ -289,20 +289,6 @@ def repetition_flags(df: DataFrame, text_col: str = "text",
         passed.alias("repetition_pass"))
 
 
-def text_profile(df: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
-    """One row per document with the full stat set."""
-    t = F.col(text_col)
-    return df.select(
-        F.col(id_col),
-        lang_id_expr(t).alias("lang_pred"),
-        token_count_ws(t).alias("n_tokens_ws"),
-        token_count_bpe(t).alias("n_tokens_bpe"),
-        quality_score_expr(t).alias("quality"),
-        fingerprint_md5(t).alias("fingerprint"),
-    )
-
-
 def unigram_logprob_scores(df: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id",
                            alpha: float = 0.5) -> DataFrame:

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from opentelemetry_collector_contrib_spark.operators.dedup import (
-    connected_components_two_phase,
+    connected_components,
     minhash_lsh_pairs,
     normalize_text,
 )
@@ -78,7 +78,7 @@ def curate_corpus(docs: DataFrame, text_col: str = "text",
     pairs = minhash_lsh_pairs(s2, threshold=near_dup_threshold,
                               text_col=text_col, id_col=id_col,
                               hash_fn=hash_fn).select("id_a", "id_b")
-    clusters = connected_components_two_phase(pairs)
+    clusters = connected_components(pairs)
     near_dup = clusters.filter(F.col("node") != F.col("cluster")) \
                        .select(F.col("node").alias(id_col))
 

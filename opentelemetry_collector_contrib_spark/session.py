@@ -95,9 +95,9 @@ def get_spark(
         # 35.7s -> 20.6s (8 cores) for the 5M-row per-sink write, and
         # its heavier per-writer memory traffic is what dragged the
         # N->4N write-phase scaling to 0.39 (BENCH/BASELINE.md). Cold
-        # archival tables can opt into zstd via SPARK_GRAFT_PARQUET_CODEC.
-        .config("spark.sql.parquet.compression.codec",
-                os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "snappy"))
+        # archival tables can opt into zstd with get_spark(extra_conf=
+        # {"spark.sql.parquet.compression.codec": "zstd"}).
+        .config("spark.sql.parquet.compression.codec", "snappy")
     )
     extra_conf = extra_conf or {}
     for k, v in extra_conf.items():

@@ -1,5 +1,5 @@
 """spanmetrics / signaltometrics / tail sampling / enrichment joins
-(geoip range join, assoc coalesce join, resource detection, dns)."""
+(geoip range join, assoc coalesce join, resource detection)."""
 
 import math
 
@@ -10,10 +10,8 @@ from pyspark.sql import functions as F
 from opentelemetry_collector_contrib_spark.operators.aggregate import span_metrics
 from opentelemetry_collector_contrib_spark.operators.enrich import (
     coalesce_assoc_join,
-    dns_lookup_join,
     geoip_join,
     ip_to_long,
-    lookup_join,
     resource_detection,
 )
 from opentelemetry_collector_contrib_spark.operators.signaltometrics import (
@@ -255,22 +253,6 @@ def test_resource_detection_override(spark):
     assert got == [("prod", "eu"), ("x", "eu")]  # existing env kept
     force = resource_detection({"env": "prod"}, override=True).apply(df)
     assert all(r["env"] == "prod" for r in force.collect())
-
-
-def test_dns_lookup_join(spark):
-    hosts = spark.createDataFrame([("h1", "10.0.0.1")], "hostname string, ip string")
-    df = spark.createDataFrame([("h1",), ("h2",)], "host string")
-    out = {r["host"]: r["ip"] for r in dns_lookup_join(hosts, "host").apply(df).collect()}
-    assert out == {"h1": "10.0.0.1", "h2": None}
-
-
-def test_lookup_join_broadcast(spark):
-    lookup = spark.createDataFrame([("a", 1)], "k string, v int")
-    df = spark.createDataFrame([("a",), ("b",)], "k string")
-    out = lookup_join(lookup, on="k").apply(df)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert out.count() == 2
 
 
 def test_grafanacloud_host_metrics(spark):

@@ -4,15 +4,17 @@ embedding near-dup), similarity search, text stats, multimodal stubs."""
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from opentelemetry_collector_contrib_spark.operators import dedup
 from opentelemetry_collector_contrib_spark.operators.dedup import (
+    connected_components,
     embedding_neardup_pairs,
     exact_dedup,
     minhash_from_shingles,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    simhash_dedup,
     with_shingles,
     with_simhash,
 )
@@ -23,8 +25,10 @@ from opentelemetry_collector_contrib_spark.operators.similarity import (
     ivf_topk,
 )
 from opentelemetry_collector_contrib_spark.operators.textstats import (
+    fingerprint_md5,
     lang_id_expr,
-    text_profile,
+    quality_score_expr,
+    token_count_ws,
 )
 
 
@@ -88,9 +92,6 @@ def test_simhash_near_dups(spark, docs):
     # sum is near 0); the invariant is relative: closer text -> smaller
     # hamming distance
     assert ham(sh[0], sh[2]) < ham(sh[0], sh[3])
-    pairs = {(r["id_a"], r["id_b"]) for r in
-             simhash_dedup(docs, hamming_threshold=8).collect()}
-    assert (0, 1) in pairs  # identical docs -> distance 0
 
 
 def test_ngram_jaccard(spark, docs):
@@ -244,68 +245,100 @@ def test_embedding_neardup_planted_recall(spark):
     assert recall >= 0.9, (recall, len(pairs))
 
 
+def _union_find(edges):
+    """node -> its component's min id, over the non-NULL endpoints."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        for x in (a, b):
+            if x is not None:
+                parent.setdefault(x, x)
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _components(spark, edges, id_type="long"):
+    df = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    rows = connected_components(df).collect()
+    got = {r["node"]: r["cluster"] for r in rows}
+    assert len(got) == len(rows), "a node labeled twice"
+    return got
+
+
 def test_connected_components_clusters(spark):
     """Transitive closure over pair edges: a chain (1-2, 2-3), a
     separate pair (10-11), an isolated pair chain joined late
     (20-21, 21-22, 22-23) — every node labels with its component min."""
-    from opentelemetry_collector_contrib_spark.operators.dedup import (
-        connected_components)
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
-        "id_a long, id_b long")
-    got = {r["node"]: r["cluster"]
-           for r in connected_components(edges).collect()}
+    got = _components(
+        spark, [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)])
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
                    20: 20, 21: 20, 22: 20, 23: 20}
 
 
-def test_two_phase_cc_matches_label_prop(spark):
-    """large-star/small-star yields identical labels to min-label
-    propagation on a mixed graph."""
-    from opentelemetry_collector_contrib_spark.operators.dedup import (
-        connected_components, connected_components_two_phase)
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23), (5, 3)],
-        "id_a long, id_b long")
-    a = {r["node"]: r["cluster"]
-         for r in connected_components(edges).collect()}
-    b = {r["node"]: r["cluster"]
-         for r in connected_components_two_phase(edges).collect()}
-    assert a == b
-    assert b[5] == 1 and b[23] == 20
+def test_two_phase_cc_matches_union_find(spark):
+    """large-star/small-star labels equal a union-find's on a mixed
+    graph (a late edge 5-3 joins node 5 to the 1-2-3 chain)."""
+    edges = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23), (5, 3)]
+    got = _components(spark, edges)
+    assert got == _union_find(edges)
+    assert got[5] == 1 and got[23] == 20
 
 
 def test_two_phase_cc_string_ids(spark):
-    """ADVICE r3: non-numeric ids (string doc hashes/URLs, as
-    curate_corpus may pass) take the dictionary lane and keep the
-    contract: cluster = component min id in the ORIGINAL ordering,
-    matching connected_components exactly."""
-    from opentelemetry_collector_contrib_spark.operators.dedup import (
-        connected_components, connected_components_two_phase)
-    edges = spark.createDataFrame(
-        [("url-b", "url-a"), ("url-b", "url-c"), ("doc-9", "doc-2"),
-         ("zzz", "doc-9"), ("solo-x", "solo-y")],
-        "id_a string, id_b string")
-    a = {r["node"]: r["cluster"]
-         for r in connected_components(edges).collect()}
-    b = {r["node"]: r["cluster"]
-         for r in connected_components_two_phase(edges).collect()}
-    assert a == b
-    assert b["url-c"] == "url-a" and b["zzz"] == "doc-2"
-    assert b["solo-y"] == "solo-x"
+    """Non-numeric ids (string doc hashes/URLs, as curate_corpus may
+    pass) take the dictionary lane and keep the contract: cluster =
+    component min id in the ORIGINAL ordering."""
+    edges = [("url-b", "url-a"), ("url-b", "url-c"), ("doc-9", "doc-2"),
+             ("zzz", "doc-9"), ("solo-x", "solo-y")]
+    got = _components(spark, edges, "string")
+    assert got == _union_find(edges)
+    assert got["url-c"] == "url-a" and got["zzz"] == "doc-2"
+    assert got["solo-y"] == "solo-x"
 
 
 def test_two_phase_cc_long_chain_logarithmic(spark):
-    """A 64-node chain (diameter 63) collapses to one cluster within
-    the default 20 two-phase rounds — min-label propagation would need
-    63 rounds; this is why the two-phase variant is the scale path."""
-    from opentelemetry_collector_contrib_spark.operators.dedup import (
-        connected_components_two_phase)
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(63)], "id_a long, id_b long")
-    got = {r["node"]: r["cluster"]
-           for r in connected_components_two_phase(edges).collect()}
+    """A 64-node chain (diameter 63) collapses to one cluster: the
+    star rounds need about log2(64) of them, where min-label
+    propagation would need 63."""
+    got = _components(spark, [(i, i + 1) for i in range(63)])
     assert got == {i: 0 for i in range(64)}
+
+
+def test_connected_components_never_returns_unconverged(spark, monkeypatch):
+    """Past the round bound the call raises; it never hands back the
+    labels of an unfinished closure."""
+    monkeypatch.setattr(dedup, "_MAX_STAR_ROUNDS", 1)
+    edges = spark.createDataFrame([(i, i + 1) for i in range(40)],
+                                  "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        connected_components(edges)
+
+
+_ids = {"long": st.integers(-4, 12),
+        "string": st.text(alphabet="abAB0", max_size=2)}
+_graphs = st.sampled_from(sorted(_ids)).flatmap(lambda t: st.tuples(
+    st.just(t),
+    st.lists(st.tuples(st.none() | _ids[t], st.none() | _ids[t]),
+             max_size=24)))
+
+
+@settings(max_examples=8, deadline=None)
+@given(_graphs)
+@example(("string", [("a", "a"), ("b", "c")]))  # self-loop node keeps a label
+@example(("long", [(7, None), (None, None), (3, 2), (2, 3), (2, 3)]))
+def test_connected_components_matches_union_find(spark, graph):
+    """Random small graphs — int and string ids, self-loops, repeated
+    and reversed edges, NULL endpoints: every non-NULL endpoint gets
+    exactly one label, its component's min id, as a union-find gives."""
+    id_type, edges = graph
+    assert _components(spark, edges, id_type) == _union_find(edges)
 
 
 def test_lang_id_and_profile(spark, docs):
@@ -313,7 +346,11 @@ def test_lang_id_and_profile(spark, docs):
             for r in docs.select("doc_id", lang_id_expr(F.col("text")).alias("lang_pred")).collect()}
     assert pred[0] == "en"
     assert pred[4] == "de"
-    prof = {r["doc_id"]: r for r in text_profile(docs).collect()}
+    t = F.col("text")
+    prof = {r["doc_id"]: r for r in docs.select(
+        "doc_id", token_count_ws(t).alias("n_tokens_ws"),
+        quality_score_expr(t).alias("quality"),
+        fingerprint_md5(t).alias("fingerprint")).collect()}
     assert prof[0]["n_tokens_ws"] == len(docs.first()["text"].split())
     assert prof[0]["fingerprint"] == prof[1]["fingerprint"]
     assert prof[0]["fingerprint"] != prof[3]["fingerprint"]

@@ -52,6 +52,15 @@ def test_every_oracle_has_query():
     assert set(ORACLES) <= set(QUERIES)
 
 
+def test_no_two_oracles_share_sql():
+    """Two queries checked by the same SQL compute the same thing: one
+    of them is a duplicate."""
+    by_sql = {}
+    for name, sql in ORACLES.items():
+        by_sql.setdefault(" ".join(sql.split()), []).append(name)
+    assert [names for names in by_sql.values() if len(names) > 1] == []
+
+
 def assert_frames_match(got: pd.DataFrame, exp: pd.DataFrame, name: str):
     """Driver-strict compare (VERDICT r3 item 3): the driver's value-hash
     stringifies raw cell values, so an int64 column on one side vs a

@@ -19,7 +19,6 @@ from opentelemetry_collector_contrib_spark.operators.recombine import recombine
 from opentelemetry_collector_contrib_spark.operators.routing import (
     Route,
     router,
-    split_by_sink,
 )
 
 
@@ -81,15 +80,6 @@ def test_router_first_match_wins_and_default(spark):
     routes = [Route("status >= 500", "err"), Route("lang = 'en'", "en")]
     got = [r["sink"] for r in router(routes).apply(df).collect()]
     assert got == ["err", "err", "en", "default"]  # 600/en -> err (first match MOVES)
-
-
-def test_split_by_sink_disjoint_and_complete(spark):
-    df = spark.createDataFrame([(i,) for i in range(100)], "v int")
-    routes = [Route("v % 3 = 0", "s0"), Route("v % 3 = 1", "s1")]
-    sinks = split_by_sink(df, routes)
-    counts = {k: v.count() for k, v in sinks.items()}
-    assert sum(counts.values()) == 100
-    assert counts["s0"] == 34 and counts["s1"] == 33 and counts["default"] == 33
 
 
 def test_recombine_is_first_entry(spark):

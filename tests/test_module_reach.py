@@ -38,19 +38,14 @@ TEST_ONLY_NAMES = {f"{PKG}.{name}": reason for name, reason in {
     "functions.ottl_dsl.transform_processor": "public API: transformprocessor config",
     "operators.filters.filter_processor_config": "public API: filterprocessor config",
     "functions.ottl_dsl.share_resource_mutations": "item 5",
-    "operators.dedup.simhash_dedup": "item 5",
-    "operators.enrich.lookup_join": "item 5",
     "operators.enrich.coalesce_assoc_join": "item 5",
     "operators.enrich.resource_detection": "item 5",
-    "operators.enrich.dns_lookup_join": "item 5",
     "operators.enrich.geoip_enrich": "item 5 (the geoip pair)",
     "operators.metrics_state.metrics_transform": "item 5",
     "operators.metrics_state.delta_to_cumulative_pdata": "item 5",
     "operators.metrics_state.delta_to_cumulative_expo": "item 5",
-    "operators.routing.split_by_sink": "item 5",
     "operators.routing.failover_write": "item 5",
     "operators.skew.salted_count_distinct": "item 5",
-    "operators.textstats.text_profile": "item 5",
     "sources.awslogs.parse_elb_access_logs": "item 5 (decoders)",
     "sources.awslogs.parse_subscription_filter_logs": "item 5 (decoders)",
     "sources.awslogs.parse_cloudwatch_metric_streams": "item 5 (decoders)",
